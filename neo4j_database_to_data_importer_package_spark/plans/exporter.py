@@ -164,12 +164,11 @@ class GraphExporter:
         with open(model_path, "w", encoding="utf-8") as f:
             json.dump(model, f, indent=2)
 
-        zp = None
-        if create_zip_file:
-            zp = create_zip(self.output_dir, zip_path=zip_path, clock=self.clock)
-
         files = sorted(
             e for e in os.listdir(self.output_dir)
             if e.endswith(".csv") or e == MODEL_FILENAME
         )
+        zp = None
+        if create_zip_file:
+            zp = create_zip(self.output_dir, files, zip_path=zip_path, clock=self.clock)
         return ExportResult(self.output_dir, manifest, model, model_path, zp, files)
