@@ -1,19 +1,145 @@
 """Iterative graph analytics on DataFrames (north-star: GraphX/Pregel-style
 analytics without the JVM-only GraphX API).
 
-PySpark-native route: Pregel as iterative joins with driver-side
-convergence checks and periodic ``localCheckpoint`` to cut lineage
-(SURVEY.md §7 Phase E). Vertices/edges are plain DataFrames; at 100 TB
-both sides hash-partition on vertex id so each superstep is a co-located
-shuffle join, and AQE handles skewed hubs.
+Vertices and edges are plain DataFrames. A superstep is a join of
+messages with vertex state plus a group-by (the Pregelix formulation);
+at 100 TB both sides hash-partition on the vertex id, so each superstep
+is a co-located shuffle join and AQE handles skewed hubs.
+
+Every superstep loop runs through ``run_supersteps``, the one owner of
+the loop scaffolding. An algorithm supplies its initial state table, a
+``step`` function that builds the next state lazily and, for a
+convergence loop, an ``active`` predicate over the state rows. The
+driver:
+
+- sizes shuffles to the loop for its duration (``superstep_scope``);
+- unpersists the static inputs (built with ``_static_input``) on exit,
+  also when a step raises;
+- bounds the loop at ``rounds`` supersteps;
+- decides how each round is materialized. A fixed-round loop ends every
+  round in an eager localCheckpoint (one job). A convergence loop
+  checkpoints lazily and then runs ONE count of the active rows, which
+  both materializes the round and is the convergence test; the loop
+  stops at the first round with no active row.
+
+Round fusion: ``rounds_per_checkpoint`` > 1 chains that many rounds
+between materializations. It is legal only when every aggregate in the
+step is an exact min/max: the un-materialized mid-chain state then
+re-executes to the same values under any shuffle-fetch order, and extra
+rounds past a fixpoint are no-ops. Float-sum loops (PageRank, PPR, HITS)
+would diverge between the branches that re-read the mid-chain state, so
+they stay at 1; label propagation, Katz and the spectral estimate stay
+at 1 because lazy chaining measured slower there (round 15). Today only
+``shortest_paths`` fuses, at 2 rounds per checkpoint.
+
+Undirected edge sets come from ``_undirected`` (both orientations) and
+``_canonical`` (one least→greatest row per edge), so every algorithm
+plans the same symmetrisation.
 """
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame
+from pyspark import StorageLevel
+from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
-from ..functions.numeric import round_half_up
+from ..functions.numeric import dsum, round_half_up
+from ..partitioning import state_broadcaster, superstep_scope
+
+
+def _undirected(
+    edges: DataFrame, src: str = "src", dst: str = "dst", drop_loops: bool = False
+) -> DataFrame:
+    """Distinct (a, b) rows holding both orientations of every edge;
+    ``drop_loops`` removes self-loops."""
+    und = edges.select(F.col(src).alias("a"), F.col(dst).alias("b")).union(
+        edges.select(F.col(dst).alias("a"), F.col(src).alias("b"))
+    )
+    if drop_loops:
+        und = und.where(F.col("a") != F.col("b"))
+    return und.distinct()
+
+
+def _canonical(
+    edges: DataFrame, src: str = "src", dst: str = "dst", cols: tuple = ("u", "v")
+) -> DataFrame:
+    """One distinct row per undirected non-loop edge, oriented
+    least → greatest into ``cols``."""
+    u, v = cols
+    return (
+        edges.select(
+            F.least(F.col(src), F.col(dst)).alias(u),
+            F.greatest(F.col(src), F.col(dst)).alias(v),
+        )
+        .where(F.col(u) != F.col(v))
+        .distinct()
+    )
+
+
+def _sym(und: DataFrame) -> tuple[DataFrame, DataFrame]:
+    """Both orientations of a canonical (u, v) table, and its (u, deg)
+    degree table."""
+    sym = und.unionByName(und.select(F.col("v").alias("u"), F.col("u").alias("v")))
+    return sym, sym.groupBy("u").agg(F.count(F.lit(1)).alias("deg"))
+
+
+def _static_input(df: DataFrame) -> DataFrame:
+    """Persist a table a superstep loop re-reads every round; pass it to
+    ``run_supersteps(static=...)``, which unpersists it."""
+    return df.persist(StorageLevel.MEMORY_AND_DISK)
+
+
+def run_supersteps(
+    table: DataFrame,
+    step,
+    *,
+    rounds: int,
+    scope_rows: int,
+    static: tuple = (),
+    active=None,
+    rounds_per_checkpoint: int = 1,
+    round_stats: list | None = None,
+) -> DataFrame:
+    """Run ``step(table, i)`` for rounds i = 1..``rounds`` and return the
+    last materialized state table.
+
+    ``step`` returns the next state lazily; it must not materialize it.
+    ``scope_rows`` sizes the loop's shuffles (``superstep_scope``);
+    ``static`` are the persisted inputs, unpersisted on exit.
+
+    ``active`` (a boolean Column over the state) makes this a
+    convergence loop: the initial table and every materialized round are
+    checkpointed lazily and ``table.filter(active).count()`` is the
+    round's one action; the loop stops when it returns 0. The counts go
+    to ``round_stats`` when a list is given. Without ``active`` the loop
+    is fixed-round and every round is one eager checkpoint.
+
+    ``rounds_per_checkpoint`` > 1 materializes only every that many
+    rounds (and the last). Use it only for exact min/max steps; see the
+    module docstring for the rule.
+    """
+    stats = [] if round_stats is None else round_stats
+
+    def materialize(t: DataFrame) -> DataFrame:
+        if active is None:
+            return t.localCheckpoint(eager=True)
+        t = t.localCheckpoint(eager=False)
+        stats.append(t.filter(active).count())
+        return t
+
+    try:
+        with superstep_scope(table.sparkSession, scope_rows):
+            table = materialize(table)
+            for i in range(1, rounds + 1):
+                if active is not None and stats[-1] == 0:
+                    break
+                table = step(table, i)
+                if i % rounds_per_checkpoint == 0 or i == rounds:
+                    table = materialize(table)
+            return table
+    finally:
+        for df in static:
+            df.unpersist()
 
 
 def degrees(edges: DataFrame, src: str = "src", dst: str = "dst") -> DataFrame:
@@ -35,14 +161,29 @@ def connected_components(
     src: str = "src",
     dst: str = "dst",
     max_iter: int = 50,
-    checkpoint_every: int = 5,
 ) -> DataFrame:
     """Undirected connected components by hash-min label propagation.
 
     Each superstep: component[v] ← min(component[v], min over neighbors).
-    Converges in O(diameter) supersteps; lineage is cut with
-    localCheckpoint to keep plans bounded. Returns (node, component)
+    Converges in O(diameter) supersteps. Returns (node, component)
     where component = min node id in the component.
+
+    The state is (node, component, cand): the label before the round and
+    the best label a neighbor offered. Delta propagation: only nodes
+    whose label just improved message their neighbors (a node whose
+    label is stable already delivered it), so the frontier shrinks every
+    superstep and late iterations join a handful of rows instead of the
+    full vertex set. The initial state offers every node its own id as
+    ``cand`` with no ``component``, so round 1 messages from every node.
+
+    r14: the old cand-aggregate + comp-left-join pair is fused into ONE
+    union + aggregate (min is order-independent, and a node has exactly
+    one comp row and ≤1 cand value, so the grouped min reproduces the
+    left join bit-for-bit). Plan: 4 Exchanges/superstep → 1 (see
+    plans/r14/). The frontier deliberately does NOT broadcast: a
+    measured ablation (OPTIMIZATION_r14.md) showed per-superstep
+    broadcast builds cost more than the small exchanges they replace at
+    every scale where they'd fire.
 
     r15 ablation: the two-rounds-per-checkpoint fusion that won 0.896
     in ``shortest_paths`` (same min algebra, same loop shape) measured
@@ -52,85 +193,70 @@ def connected_components(
     so there are too few barriers to save and the mid-pair duplicated
     aggregate offsets them. One round per checkpoint kept.
     """
-    from pyspark import StorageLevel
+    und = _static_input(_undirected(edges, src, dst))
+    n_edges = und.count()  # warms the cache; sizes superstep shuffles
+    best = F.least(F.col("component"), F.col("cand"))
+    improved = ~F.col("component").eqNullSafe(best)
 
-    # The edge list is re-joined every superstep — persist it once; each
-    # superstep's result is materialized (localCheckpoint) so the
-    # convergence probe and the next iteration read it instead of
-    # re-deriving the whole lineage (without this, iteration i recomputes
-    # iterations 0..i-1 twice: once for the probe, once for the join).
-    und = (
-        edges.select(F.col(src).alias("a"), F.col(dst).alias("b"))
-        .union(edges.select(F.col(dst).alias("a"), F.col(src).alias("b")))
-        .distinct()
-        .persist(StorageLevel.MEMORY_AND_DISK)
-    )
-    # One count up front: warms the persisted edge cache AND sizes the
-    # superstep shuffles to the state (see partitioning.superstep_scope —
-    # the checkpoint path bypasses AQE coalescing, so small-graph loops
-    # otherwise pay full-width exchanges every superstep).
-    n_edges = und.count()
-    from ..partitioning import superstep_scope
-
-    try:
-        with superstep_scope(edges.sparkSession, n_edges):
-            # r14: the old cand-aggregate + comp-left-join pair is fused
-            # into ONE union + aggregate (min is order-independent, and
-            # a node has exactly one comp row and ≤1 cand value, so the
-            # grouped min reproduces the left join bit-for-bit). Plan:
-            # 4 Exchanges/superstep → 1 (see plans/r14/). The frontier
-            # deliberately does NOT broadcast: a measured ablation
-            # (OPTIMIZATION_r14.md) showed per-superstep broadcast
-            # builds (driver collect + relation build, serialized
-            # before the superstep job) cost more than the small
-            # exchanges they replace at every scale where they'd fire.
-            comp = (
-                und.select(F.col("a").alias("node"))
-                .distinct()
-                .select("node", F.col("node").alias("component"))
-                .localCheckpoint(eager=True)
+    def step(state: DataFrame, _) -> DataFrame:
+        frontier = state.filter(improved).select("node", best.alias("component"))
+        msgs = und.join(frontier, und["a"] == frontier["node"]).select(
+            F.col("b").alias("node"),
+            F.col("component").alias("c"),
+            F.lit(True).alias("m"),
+        )
+        return (
+            msgs.unionByName(
+                state.select("node", best.alias("c"), F.lit(False).alias("m"))
             )
-            # Delta propagation: only nodes whose label just improved
-            # message their neighbors (a node whose label is stable
-            # already delivered it). The frontier shrinks every
-            # superstep, so late iterations join a handful of rows
-            # instead of the full vertex set.
-            frontier = comp
-            for i in range(max_iter):
-                bfr = frontier
-                msgs = und.join(bfr, und["a"] == bfr["node"]).select(
-                    F.col("b").alias("node"),
-                    F.col("component").alias("c"),
-                    F.lit(True).alias("m"),
-                )
-                joined = (
-                    msgs.unionByName(
-                        comp.select(
-                            "node",
-                            F.col("component").alias("c"),
-                            F.lit(False).alias("m"),
-                        )
-                    )
-                    .groupBy("node")
-                    .agg(
-                        F.min(F.when(~F.col("m"), F.col("c"))).alias("component"),
-                        F.min(F.when(F.col("m"), F.col("c"))).alias("cand"),
-                    )
-                    .select("node", "component", "cand")
-                    .localCheckpoint(eager=True)  # the superstep's only big job
-                )
-                frontier = joined.filter(
-                    F.col("cand") < F.col("component")
-                ).select("node", F.col("cand").alias("component"))
-                comp = joined.select(
-                    "node",
-                    F.least(F.col("component"), F.coalesce(F.col("cand"), F.col("component"))).alias("component"),
-                )
-                if frontier.limit(1).count() == 0:  # tiny probe on checkpointed rows
-                    break
-    finally:
-        und.unpersist()
-    return comp.select("node", "component")
+            .groupBy("node")
+            .agg(
+                F.min(F.when(~F.col("m"), F.col("c"))).alias("component"),
+                F.min(F.when(F.col("m"), F.col("c"))).alias("cand"),
+            )
+        )
+
+    init = (
+        und.select(F.col("a").alias("node"))
+        .distinct()
+        .select(
+            "node",
+            F.lit(None).cast(und.schema["a"].dataType).alias("component"),
+            F.col("node").alias("cand"),
+        )
+    )
+    state = run_supersteps(
+        init, step, rounds=max_iter, scope_rows=n_edges, static=(und,), active=improved
+    )
+    return state.select("node", best.alias("component"))
+
+
+def _rank_inputs(edges: DataFrame, src: str, dst: str):
+    """Static inputs of the PageRank-family loops: the node set, its
+    size, out-degrees and the (node, dst_node) edge list."""
+    nodes = _static_input(
+        edges.select(F.col(src).alias("node"))
+        .union(edges.select(F.col(dst).alias("node")))
+        .distinct()
+    )
+    out_deg = _static_input(
+        edges.groupBy(F.col(src).alias("node")).agg(F.count(F.lit(1)).alias("deg"))
+    )
+    e = _static_input(edges.select(F.col(src).alias("node"), F.col(dst).alias("dst_node")))
+    return nodes, nodes.count(), out_deg, e
+
+
+def _rank_messages(ranks: DataFrame, out_deg: DataFrame, e: DataFrame):
+    """One rank-propagation superstep's (node, c) messages and its 1-row
+    dangling mass (rank held by nodes without out-edges)."""
+    with_deg = ranks.join(out_deg, "node", "left")
+    msgs = e.join(with_deg, "node").select(
+        F.col("dst_node").alias("node"), (F.col("rank") / F.col("deg")).alias("c")
+    )
+    dangling_df = with_deg.filter(F.col("deg").isNull()).agg(
+        F.coalesce(F.sum("rank"), F.lit(0.0)).alias("__dangling")
+    )
+    return msgs, F.broadcast(dangling_df)
 
 
 def pagerank(
@@ -139,95 +265,112 @@ def pagerank(
     dst: str = "dst",
     iterations: int = 10,
     damping: float = 0.85,
-    checkpoint_every: int = 5,
 ) -> DataFrame:
     """Fixed-iteration PageRank (dangling mass redistributed uniformly).
 
     Returns (node, pagerank rounded). Deterministic for a fixed
     iteration count up to FP summation order — the oracle uses a
     matching fixed-iteration recursion and values are rounded.
+
+    r14: the contrib-aggregate + nodes-left-join pair is fused into one
+    union + sum (null-ignoring sum over the message rows plus a null row
+    per node ≡ the left join's coalesce semantics) — fewer exchanges per
+    iteration (see plans/r14/). The dangling mass is a broadcast 1-row
+    aggregate folded into the same superstep job, so the round's only
+    action is its checkpoint. State deliberately does NOT broadcast: the
+    with_deg broadcast build (a join executed as a driver collect,
+    serialized before the superstep job) measured strictly slower than
+    the small exchanges it replaced (OPTIMIZATION_r14.md ablation).
     """
-    from pyspark import StorageLevel
+    nodes, n_nodes, out_deg, e = _rank_inputs(edges, src, dst)
 
-    # Every static input the loop re-joins is persisted once; each
-    # superstep's ranks are materialized (localCheckpoint) so the
-    # per-iteration dangling-mass action reads the previous iteration's
-    # result instead of recomputing the whole chain back to the last
-    # checkpoint (which made iteration cost grow with checkpoint_every).
-    nodes = (
-        edges.select(F.col(src).alias("node"))
-        .union(edges.select(F.col(dst).alias("node")))
-        .distinct()
-        .persist(StorageLevel.MEMORY_AND_DISK)
-    )
-    n_nodes = nodes.count()
-    out_deg = (
-        edges.groupBy(F.col(src).alias("node"))
-        .agg(F.count(F.lit(1)).alias("deg"))
-        .persist(StorageLevel.MEMORY_AND_DISK)
-    )
-    e = edges.select(F.col(src).alias("node"), F.col(dst).alias("dst_node")).persist(
-        StorageLevel.MEMORY_AND_DISK
-    )
-    from ..partitioning import superstep_scope
+    def step(ranks: DataFrame, _) -> DataFrame:
+        msgs, dangling = _rank_messages(ranks, out_deg, e)
+        return (
+            msgs.unionByName(nodes.select("node", F.lit(None).cast("double").alias("c")))
+            .groupBy("node")
+            .agg(F.sum("c").alias("contrib"))
+            .crossJoin(dangling)
+            .select(
+                "node",
+                (
+                    F.lit((1.0 - damping) / n_nodes)
+                    + F.lit(damping)
+                    * (
+                        F.col("__dangling") / F.lit(float(n_nodes))
+                        + F.coalesce(F.col("contrib"), F.lit(0.0))
+                    )
+                ).alias("rank"),
+            )
+        )
 
-    try:
-        # Superstep shuffles sized to the state (node count): the
-        # checkpoint path bypasses AQE coalescing, so a small graph
-        # otherwise pays full-width exchanges 10 times over.
-        with superstep_scope(edges.sparkSession, n_nodes):
-            # r14: the contrib-aggregate + nodes-left-join pair is fused
-            # into one union + sum (null-ignoring sum over the message
-            # rows plus a null row per node ≡ the left join's coalesce
-            # semantics) — fewer exchanges per iteration (see
-            # plans/r14/). State deliberately does NOT broadcast: the
-            # with_deg broadcast build (a join executed as a driver
-            # collect, serialized before the superstep job) measured
-            # strictly slower than the small exchanges it replaced
-            # (OPTIMIZATION_r14.md ablation).
-            ranks = nodes.select(
-                "node", F.lit(1.0 / n_nodes).alias("rank")
-            ).localCheckpoint(eager=True)
-            for _ in range(iterations):
-                with_deg = ranks.join(out_deg, "node", "left")
-                msgs = e.join(with_deg, "node").select(
-                    F.col("dst_node").alias("node"),
-                    (F.col("rank") / F.col("deg")).alias("c"),
-                )
-                # Dangling mass as a broadcast 1-row aggregate folded into
-                # the same superstep job — no separate driver action per
-                # iteration (the only action is the eager localCheckpoint
-                # below).
-                dangling_df = (
-                    with_deg.filter(F.col("deg").isNull())
-                    .agg(F.coalesce(F.sum("rank"), F.lit(0.0)).alias("__dangling"))
-                )
-                ranks = (
-                    msgs.unionByName(
-                        nodes.select(
-                            "node", F.lit(None).cast("double").alias("c")
-                        )
-                    )
-                    .groupBy("node")
-                    .agg(F.sum("c").alias("contrib"))
-                    .crossJoin(F.broadcast(dangling_df))
-                    .select(
-                        "node",
-                        (
-                            F.lit((1.0 - damping) / n_nodes)
-                            + F.lit(damping)
-                            * (
-                                F.col("__dangling") / F.lit(float(n_nodes))
-                                + F.coalesce(F.col("contrib"), F.lit(0.0))
-                            )
-                        ).alias("rank"),
-                    )
-                    .localCheckpoint(eager=True)
-                )
-    finally:
-        for df in (nodes, out_deg, e):
-            df.unpersist()
+    ranks = run_supersteps(
+        nodes.select("node", F.lit(1.0 / n_nodes).alias("rank")),
+        step,
+        rounds=iterations,
+        scope_rows=n_nodes,
+        static=(nodes, out_deg, e),
+    )
     return ranks.select("node", round_half_up("rank", 8).alias("pagerank"))
+
+
+def _bfs(
+    edges: DataFrame,
+    start: DataFrame,
+    src: str,
+    dst: str,
+    max_hops: int,
+    keys: tuple = (),
+) -> DataFrame:
+    """Frontier BFS over the undirected graph from ``start`` rows
+    (*keys, node), searched independently per ``keys`` value. Returns
+    (*keys, node, dist) for every pair reached within ``max_hops``.
+
+    Two tables: the visited set and the frontier. Each hop is one
+    edge⋈frontier join, a distinct and an anti-join against the visited
+    set; the frontier is the driver's state (every row active), so the
+    hop's count both materializes it and stops the loop at the first
+    empty frontier. The visited set folds in the previous frontier at
+    the start of each hop (one eager checkpoint). (r14 ablation: per-hop
+    broadcast builds of the frontier / visited set measured slower than
+    the small exchanges they replace — the loop keeps plain shuffle
+    joins. A single state table ending each hop in one count_if issued
+    fewer jobs but measured slower.)
+    """
+    und = _static_input(_undirected(edges, src, dst))
+    n_edges = und.count()  # warms the cache; sizes superstep shuffles
+    on = [*keys, "node"]
+    visited = None
+
+    def step(frontier: DataFrame, hop: int) -> DataFrame:
+        nonlocal visited
+        visited = (
+            frontier
+            if visited is None
+            else visited.union(frontier).localCheckpoint(eager=True)
+        )
+        f = frontier.select(*on)
+        return (
+            und.join(f, und["a"] == f["node"])
+            .select(*keys, F.col("b").alias("node"))
+            .distinct()
+            .join(visited.select(*on), on, "left_anti")
+            .withColumn("dist", F.lit(hop))
+        )
+
+    stats: list = []
+    last = run_supersteps(
+        start.withColumn("dist", F.lit(0)),
+        step,
+        rounds=max_hops,
+        scope_rows=n_edges,
+        static=(und,),
+        active=F.lit(True),
+        round_stats=stats,
+    )
+    if visited is None:
+        return last
+    return visited.union(last) if stats[-1] else visited
 
 
 def bfs_distances(
@@ -244,83 +387,34 @@ def bfs_distances(
     only, and the loop stops at the first empty frontier (or ``max_hops``
     as the safety bound). Returns (node, dist) for reachable nodes.
     """
-    from pyspark import StorageLevel
-
-    und = (
-        edges.select(F.col(src).alias("a"), F.col(dst).alias("b"))
-        .union(edges.select(F.col(dst).alias("a"), F.col(src).alias("b")))
-        .distinct()
-        .persist(StorageLevel.MEMORY_AND_DISK)
-    )
-    n_edges = und.count()  # warms the cache; sizes superstep shuffles
-    from ..partitioning import superstep_scope
-
-    try:
-        with superstep_scope(edges.sparkSession, n_edges):
-            # (r14 ablation: per-hop broadcast builds of the frontier /
-            # visited set measured slower than the small exchanges they
-            # replace — the loop keeps plain shuffle joins.)
-            dist = (
-                sources.select(F.col(node_col).alias("node"))
-                .distinct()
-                .withColumn("dist", F.lit(0))
-                .localCheckpoint(eager=True)
-            )
-            frontier = dist.select("node")
-            for hop in range(1, max_hops + 1):
-                nxt = (
-                    und.join(frontier, und["a"] == frontier["node"])
-                    .select(F.col("b").alias("node"))
-                    .distinct()
-                    .join(dist.select("node"), "node", "left_anti")
-                    .withColumn("dist", F.lit(hop))
-                    .localCheckpoint(eager=True)
-                )
-                if nxt.limit(1).count() == 0:
-                    break
-                dist = dist.union(nxt).localCheckpoint(eager=True)
-                frontier = nxt.select("node")
-    finally:
-        und.unpersist()
-    return dist
+    start = sources.select(F.col(node_col).alias("node")).distinct()
+    return _bfs(edges, start, src, dst, max_hops)
 
 
-def triangle_counts(
-    edges: DataFrame, src: str = "src", dst: str = "dst"
-) -> DataFrame:
-    """Per-node triangle counts on the undirected, deduped edge set.
+def _triangles(edges: DataFrame, src: str, dst: str) -> DataFrame:
+    """Every triangle of the undirected, deduped edge set exactly once,
+    as (x, y, c) rows with x < y, by degree-ordered orientation.
 
-    Degree-ordered orientation (the O(m^1.5) algorithm): every edge is
-    directed from its lower-(degree, id) endpoint to the higher one, so
-    each node's out-degree is at most ~sqrt(2m) regardless of how hot a
-    hub is — the wedge self-join can never explode on a skewed degree
-    distribution, which is what makes this survive a 100 TB edge list
-    where the naive neighbor-intersection blows up on hubs. Wedges
-    (c→x, c→y) are then closed by one equi-join against the symmetric
-    edge set. All shuffles are keyed equi-joins; no driver state.
+    Every edge is directed from its lower-(degree, id) endpoint to the
+    higher one, so each node's out-degree is at most ~sqrt(2m)
+    regardless of how hot a hub is — the wedge self-join can never
+    explode on a skewed degree distribution. Wedges (c→x, c→y) are then
+    closed by one equi-join against the symmetric edge set.
 
-    Returns (node, n_triangles) for every node in >= 1 triangle.
+    r14: the oriented edge table is persisted so the wedge self-join's
+    two sides (and neighbor_jaccard's reuse of this whole DAG) read one
+    materialized table instead of re-running the two orientation joins
+    per branch (the un-persisted plan carried 35 Exchanges / 8
+    SortMergeJoins in neighbor_jaccard; see plans/r14/). Lifecycle (r15,
+    VERDICT r14 #8): bare persist() defaults to MEMORY_AND_DISK, so
+    eviction under pressure spills instead of recomputing; cleanup is
+    caller-scoped (clearCache per query) — the result is lazily returned
+    so there is no in-operator unpersist point.
     """
-    # (r14 ablation: BOTH a persist of the deduped edge set and an
-    # explicit degree broadcast measured SLOWER here — the identical
-    # distinct subtrees already dedup via exchange reuse, and the
-    # planner's own size estimates pick the deg join strategy. Left
-    # exactly as-is; OPTIMIZATION_r14.md.)
-    und = (
-        edges.select(
-            F.least(F.col(src), F.col(dst)).alias("u"),
-            F.greatest(F.col(src), F.col(dst)).alias("v"),
-        )
-        .where(F.col("u") != F.col("v"))
-        .distinct()
-    )
-    sym = und.unionByName(und.select(F.col("v").alias("u"), F.col("u").alias("v")))
-    deg = sym.groupBy("u").agg(F.count(F.lit(1)).alias("deg"))
+    sym, deg = _sym(_canonical(edges, src, dst))
     oriented = (
         sym.join(deg.select(F.col("u"), F.col("deg").alias("du")), "u")
-        .join(
-            deg.select(F.col("u").alias("v"), F.col("deg").alias("dv")), "v"
-        )
+        .join(deg.select(F.col("u").alias("v"), F.col("deg").alias("dv")), "v")
         .where(
             (F.col("du") < F.col("dv"))
             | ((F.col("du") == F.col("dv")) & (F.col("u") < F.col("v")))
@@ -330,13 +424,31 @@ def triangle_counts(
     )
     wedges = (
         oriented.select(F.col("u").alias("c"), F.col("v").alias("x"))
-        .join(
-            oriented.select(F.col("u").alias("c"), F.col("v").alias("y")), "c"
-        )
+        .join(oriented.select(F.col("u").alias("c"), F.col("v").alias("y")), "c")
         .where(F.col("x") < F.col("y"))
     )
     closing = sym.select(F.col("u").alias("x"), F.col("v").alias("y"))
-    tri = wedges.join(closing, ["x", "y"])
+    return wedges.join(closing, ["x", "y"])
+
+
+def triangle_counts(
+    edges: DataFrame, src: str = "src", dst: str = "dst"
+) -> DataFrame:
+    """Per-node triangle counts on the undirected, deduped edge set.
+
+    Degree-ordered orientation (the O(m^1.5) algorithm, ``_triangles``)
+    is what makes this survive a 100 TB edge list where the naive
+    neighbor-intersection blows up on hubs. All shuffles are keyed
+    equi-joins; no driver state.
+
+    Returns (node, n_triangles) for every node in >= 1 triangle.
+    """
+    # (r14 ablation: BOTH a persist of the deduped edge set and an
+    # explicit degree broadcast measured SLOWER here — the identical
+    # distinct subtrees already dedup via exchange reuse, and the
+    # planner's own size estimates pick the deg join strategy. Left
+    # exactly as-is; OPTIMIZATION_r14.md.)
+    tri = _triangles(edges, src, dst)
     roles = (
         tri.select(F.col("c").alias("node"))
         .unionAll(tri.select(F.col("x").alias("node")))
@@ -370,110 +482,88 @@ def k_core(
     union-aggregate on node-sized state (the r14 pattern: the old
     aggregate + anti-join pair is one groupBy — a dropped node's state
     row fails the ``cur >= k`` filter, a dead node's message group has
-    NULL ``cur``). The old loop re-aggregated degrees over the full
-    edge set AND anti-joined + localCheckpointed the edge table every
-    round; now only node-sized state is checkpointed. For deep peels at
-    scale the full-edge frontier scans are bounded by a rare compaction:
-    once half the remaining nodes have dropped, the edge table is
-    rebuilt to the induced subgraph (two semi-joins) and the counters
-    rebase. The drop count doubles as the termination signal (0 removed
-    → fixpoint); peeling converges in O(peel-depth) rounds, typically
-    « diameter.
+    NULL ``cur``). Only node-sized state is checkpointed. For deep peels
+    at scale the full-edge frontier scans are bounded by a rare
+    compaction: once half the remaining nodes have dropped, the edge
+    table is rebuilt to the induced subgraph (two semi-joins) and the
+    counters rebase. The drop count is the driver's active count, so it
+    doubles as the termination signal (0 removed → fixpoint); peeling
+    converges in O(peel-depth) rounds, typically « diameter.
+
+    ``round_stats``, when a list, receives the drop count of every
+    round (the peel-depth probe in SCALING.md reads it).
 
     Returns (node, core_degree): nodes of the k-core with their degree
     inside it.
     """
-    und = (
-        edges.select(
-            F.least(F.col(src), F.col(dst)).alias("u"),
-            F.greatest(F.col(src), F.col(dst)).alias("v"),
-        )
-        .where(F.col("u") != F.col("v"))
-        .distinct()
-        .persist()
-    )
+    und = _static_input(_canonical(edges, src, dst))
     # Broadcasting the drop frontier is safe while it stays executor-
     # sized; beyond that AQE's plain join is the fallback. 5M ids ≈
     # a few hundred MB — the first peel round of a pathological graph.
     _BCAST_DROP_MAX = 5_000_000
     n_edges = und.count()  # warms the cache; sizes superstep shuffles
-    from ..partitioning import state_broadcaster, superstep_scope
+    dropping = F.col("deg") < k
+    stats = [] if round_stats is None else round_stats
+    cur, alive_base, dropped_since = und, None, 0
 
-    try:
-        with superstep_scope(edges.sparkSession, n_edges):
-            cur = und
-            state = (
-                cur.select(F.col("u").alias("node"))
-                .unionAll(cur.select(F.col("v").alias("node")))
-                .groupBy("node")
-                .agg(F.count(F.lit(1)).alias("deg"))
+    def step(state: DataFrame, _) -> DataFrame:
+        nonlocal cur, alive_base, dropped_since
+        if alive_base is None:
+            alive_base = state.count()  # cheap: counts the checkpoint
+        elif dropped_since * 2 >= alive_base:
+            # Compact: the frontier joins scan the full original edge
+            # table each round; once half the nodes are gone rebuild it
+            # to the induced subgraph so deep peels stay proportional to
+            # surviving edges.
+            alive_base -= dropped_since
+            dropped_since = 0
+            sb = state_broadcaster(alive_base)
+            na = sb(state.select(F.col("node").alias("__a")))
+            nb = sb(state.select(F.col("node").alias("__b")))
+            cur = (
+                cur.join(na, cur["u"] == na["__a"], "left_semi")
+                .join(nb, F.col("v") == nb["__b"], "left_semi")
                 .localCheckpoint()
             )
-            alive_base = state.count()  # cheap: counts the checkpoint
-            dropped_since = 0
-            while True:
-                drop = state.filter(F.col("deg") < k).select("node")
-                n_drop = drop.count()
-                if round_stats is not None:
-                    # per-round drop counts: the peel-depth probe
-                    # (SCALING.md) reads rounds-to-fixpoint from here
-                    round_stats.append(n_drop)
-                if n_drop == 0:
-                    break
-                d = F.broadcast(drop) if n_drop <= _BCAST_DROP_MAX else drop
-                msgs = (
-                    cur.join(d, cur["u"] == d["node"]).select(
-                        F.col("v").alias("node")
-                    )
-                    .unionAll(
-                        cur.join(d, cur["v"] == d["node"]).select(
-                            F.col("u").alias("node")
-                        )
-                    )
-                    .select(
-                        "node",
-                        F.lit(-1).cast("long").alias("val"),
-                        F.lit(True).alias("m"),
-                    )
-                )
-                state = (
-                    msgs.unionByName(
-                        state.select(
-                            "node",
-                            F.col("deg").alias("val"),
-                            F.lit(False).alias("m"),
-                        )
-                    )
-                    .groupBy("node")
-                    .agg(
-                        F.min(F.when(~F.col("m"), F.col("val"))).alias("cur"),
-                        F.coalesce(
-                            F.sum(F.when(F.col("m"), F.col("val"))), F.lit(0)
-                        ).alias("delta"),
-                    )
-                    .filter(F.col("cur") >= k)  # NULL cur (dead node) fails too
-                    .select("node", (F.col("cur") + F.col("delta")).alias("deg"))
-                    .localCheckpoint()
-                )
-                dropped_since += n_drop
-                if dropped_since * 2 >= alive_base:
-                    # Compact: the frontier joins scan the full original
-                    # edge table each round; once half the nodes are gone
-                    # rebuild it to the induced subgraph so deep peels
-                    # stay proportional to surviving edges.
-                    alive_base -= dropped_since
-                    dropped_since = 0
-                    sb = state_broadcaster(alive_base)
-                    na = sb(state.select(F.col("node").alias("__a")))
-                    nb = sb(state.select(F.col("node").alias("__b")))
-                    cur = (
-                        cur.join(na, cur["u"] == na["__a"], "left_semi")
-                        .join(nb, F.col("v") == nb["__b"], "left_semi")
-                        .localCheckpoint()
-                    )
-        return state.select("node", F.col("deg").alias("core_degree"))
-    finally:
-        und.unpersist()
+        n_drop = stats[-1]
+        dropped_since += n_drop
+        drop = state.filter(dropping).select("node")
+        d = F.broadcast(drop) if n_drop <= _BCAST_DROP_MAX else drop
+        msgs = (
+            cur.join(d, cur["u"] == d["node"]).select(F.col("v").alias("node"))
+            .unionAll(cur.join(d, cur["v"] == d["node"]).select(F.col("u").alias("node")))
+            .select("node", F.lit(-1).cast("long").alias("val"), F.lit(True).alias("m"))
+        )
+        return (
+            msgs.unionByName(
+                state.select("node", F.col("deg").alias("val"), F.lit(False).alias("m"))
+            )
+            .groupBy("node")
+            .agg(
+                F.min(F.when(~F.col("m"), F.col("val"))).alias("cur"),
+                F.coalesce(F.sum(F.when(F.col("m"), F.col("val"))), F.lit(0)).alias("delta"),
+            )
+            .filter(F.col("cur") >= k)  # NULL cur (dead node) fails too
+            .select("node", (F.col("cur") + F.col("delta")).alias("deg"))
+        )
+
+    init = (
+        und.select(F.col("u").alias("node"))
+        .unionAll(und.select(F.col("v").alias("node")))
+        .groupBy("node")
+        .agg(F.count(F.lit(1)).alias("deg"))
+    )
+    # Each productive round drops >= 1 of the <= 2·|E| nodes.
+    state = run_supersteps(
+        init,
+        step,
+        rounds=2 * n_edges,
+        scope_rows=n_edges,
+        static=(und,),
+        active=dropping,
+        round_stats=stats,
+    )
+    return state.select("node", F.col("deg").alias("core_degree"))
 
 
 def shortest_paths(
@@ -501,12 +591,29 @@ def shortest_paths(
     plus a min-aggregate on the destination — both hash-partition on the
     vertex id, so consecutive supersteps reuse the same partitioning.
     The frontier optimization (only improved nodes message) keeps late
-    supersteps cheap exactly like ``connected_components``; state is one
-    row per reached node, never a path.
-    """
-    from pyspark import StorageLevel
+    supersteps cheap exactly like ``connected_components``; state is
+    one (node, dist, cand) row per reached node, never a path. The
+    initial state offers each source ``cand`` 0 with no ``dist``.
 
-    und = (
+    r14: the relax-aggregate + full-outer join pair is fused into one
+    union + aggregate (each node has ≤1 dist row and the min over its
+    messages; min over a singleton/null partition reproduces the
+    full-outer row set exactly). ~4 Exchanges/superstep → 1. (Frontier
+    broadcasts measured slower than the small exchanges — ablation in
+    OPTIMIZATION_r14.md — so the join stays a shuffle join.)
+
+    r15: TWO relaxation rounds per checkpoint (``rounds_per_checkpoint``
+    2, the fusion rule in the module docstring): every aggregate here
+    is a MIN, and extra relaxation rounds past the fixpoint are no-ops,
+    so probing every 2 rounds returns the identical dist table. If the
+    frontier empties after a pair's first round, its second round
+    relaxes an empty message set and dist is unchanged by construction.
+    Halves the job barriers per execution at any scale; isolated ABAB
+    min-of-7 0.896 (OPTIMIZATION_r15.md).
+    """
+    # The weighted edge set keeps the cheapest of parallel edges, so it
+    # is built here rather than by ``_undirected``.
+    und = _static_input(
         edges.select(
             F.col(src).alias("a"), F.col(dst).alias("b"), F.col(weight).alias("w")
         )
@@ -516,90 +623,49 @@ def shortest_paths(
             )
         )
         .groupBy("a", "b")
-        .agg(F.min("w").alias("w"))  # parallel edges: keep the cheapest
-        .persist(StorageLevel.MEMORY_AND_DISK)
+        .agg(F.min("w").alias("w"))
     )
     n_edges = und.count()  # warms the cache; sizes superstep shuffles
-    from ..partitioning import superstep_scope
+    no_dist = F.lit(None).cast("double")
+    improved = F.col("dist").isNull() | (F.col("cand") < F.col("dist"))
 
-    try:
-        with superstep_scope(edges.sparkSession, n_edges):
-            # r14: the relax-aggregate + full-outer join pair is fused
-            # into one union + aggregate (each node has ≤1 dist row and
-            # the min over its messages; min over a singleton/null
-            # partition reproduces the full-outer row set exactly).
-            # ~4 Exchanges/superstep → 1. (Frontier broadcasts measured
-            # slower than the small exchanges — ablation in
-            # OPTIMIZATION_r14.md — so the join stays a shuffle join.)
-            #
-            # r15: TWO relaxation rounds per checkpoint/probe (the
-            # multi-round fusion VERDICT r14 deferred). Safe here —
-            # unlike the float-sum loops (pagerank/PPR/HITS) — because
-            # every aggregate in this loop is a MIN: exact and
-            # order-independent, so the un-checkpointed mid-pair state
-            # re-executing under a different shuffle-fetch order cannot
-            # produce divergent floats in the two branches that consume
-            # it. Extra relaxation rounds past the fixpoint are no-ops
-            # (monotone min), so probing every 2 rounds returns the
-            # identical dist table. Halves the job barriers per
-            # execution at any scale; isolated ABAB min-of-7 0.896
-            # (OPTIMIZATION_r15.md).
-            dist = (
-                sources.select(F.col(node_col).alias("node"))
-                .distinct()
-                .withColumn("dist", F.lit(0.0))
-                .localCheckpoint(eager=True)
-            )
-            frontier = dist
-            done = 0
-            while done < rounds:
-                fuse = min(2, rounds - done)
-                for j in range(fuse):
-                    bfr = frontier
-                    msgs = und.join(bfr, und["a"] == bfr["node"]).select(
-                        F.col("b").alias("node"),
-                        F.lit(None).cast("double").alias("dist"),
-                        (F.col("dist") + F.col("w")).alias("cand"),
-                    )
-                    joined = (
-                        msgs.unionByName(
-                            dist.select(
-                                "node",
-                                "dist",
-                                F.lit(None).cast("double").alias("cand"),
-                            )
-                        )
-                        .groupBy("node")
-                        .agg(
-                            F.min("dist").alias("dist"),
-                            F.min("cand").alias("cand"),
-                        )
-                    )
-                    if j == fuse - 1:
-                        joined = joined.localCheckpoint(eager=True)
-                    frontier = joined.filter(
-                        F.col("dist").isNull() | (F.col("cand") < F.col("dist"))
-                    ).select("node", F.col("cand").alias("dist"))
-                    dist = joined.select(
-                        "node",
-                        F.least(
-                            F.coalesce(F.col("dist"), F.col("cand")),
-                            F.coalesce(F.col("cand"), F.col("dist")),
-                        ).alias("dist"),
-                    )
-                done += fuse
-                # Probe AFTER the fused pair (as connected_components
-                # does per round): frontier derives from the
-                # checkpointed `joined`, so the emptiness probe is a
-                # cheap local scan. If the frontier emptied after the
-                # pair's FIRST round, its second round relaxed an empty
-                # message set — dist is unchanged by construction — and
-                # the probe still exits here.
-                if frontier.limit(1).count() == 0:
-                    break
-    finally:
-        und.unpersist()
-    return dist
+    def best(state: DataFrame) -> DataFrame:
+        return state.select(
+            "node",
+            F.least(
+                F.coalesce(F.col("dist"), F.col("cand")),
+                F.coalesce(F.col("cand"), F.col("dist")),
+            ).alias("dist"),
+        )
+
+    def step(state: DataFrame, _) -> DataFrame:
+        frontier = state.filter(improved).select("node", F.col("cand").alias("dist"))
+        msgs = und.join(frontier, und["a"] == frontier["node"]).select(
+            F.col("b").alias("node"),
+            no_dist.alias("dist"),
+            (F.col("dist") + F.col("w")).alias("cand"),
+        )
+        return (
+            msgs.unionByName(best(state).select("node", "dist", no_dist.alias("cand")))
+            .groupBy("node")
+            .agg(F.min("dist").alias("dist"), F.min("cand").alias("cand"))
+        )
+
+    init = (
+        sources.select(F.col(node_col).alias("node"))
+        .distinct()
+        .select("node", no_dist.alias("dist"), F.lit(0.0).alias("cand"))
+    )
+    state = run_supersteps(
+        init,
+        step,
+        rounds=rounds,
+        scope_rows=n_edges,
+        static=(und,),
+        active=improved,
+        rounds_per_checkpoint=2,
+    )
+    return best(state)
 
 
 def label_propagation(
@@ -621,8 +687,12 @@ def label_propagation(
     endpoint; the label table broadcasts when driver-known small), one
     count aggregate on (node, label), and one grouped min picking the
     winner — hash-partitioned on the vertex id so consecutive rounds
-    reuse the partitioning; ``localCheckpoint`` truncates lineage per
-    superstep. State is one row per node.
+    reuse the partitioning. State is one row per node.
+
+    r14: the winner is a grouped min(struct(-c, label)) instead of a
+    row_number window — the same total order (count desc, label asc;
+    counts are positive longs so -c ascending ≡ c descending), but with
+    map-side partial aggregation and no per-partition sort.
 
     r15 ablation: chaining the rounds lazily (single eager checkpoint
     at the end — here the state has ONE consumer per round, so no
@@ -632,53 +702,36 @@ def label_propagation(
     per-superstep checkpoint stays: each round's exchange then plans
     against materialized stats instead of a deepening lazy chain.
     """
-    und = (
-        edges.select(F.col(src).alias("a"), F.col(dst).alias("b"))
-        .union(edges.select(F.col(dst).alias("a"), F.col(src).alias("b")))
-        .where(F.col("a") != F.col("b"))
-        .distinct()
-        .persist()
-    )
-    nodes = und.select(F.col("a").alias("node")).distinct()
+    und = _static_input(_undirected(edges, src, dst, drop_loops=True))
     n_edges = und.count()  # warms the cache; sizes superstep shuffles
-    from ..partitioning import state_broadcaster, superstep_scope
+    bc = state_broadcaster(n_edges)
 
-    try:
-        with superstep_scope(edges.sparkSession, n_edges):
-            # r14: labels broadcast into the vote join when the graph is
-            # driver-known small, and the winner is a grouped
-            # min(struct(-c, label)) instead of a row_number window —
-            # the same total order (count desc, label asc; counts are
-            # positive longs so -c ascending ≡ c descending), but with
-            # map-side partial aggregation and no per-partition sort.
-            bc = state_broadcaster(n_edges)
-            labels = nodes.withColumn("label", F.col("node")).localCheckpoint(
-                eager=True
+    def step(labels: DataFrame, _) -> DataFrame:
+        blb = bc(labels)
+        votes = (
+            und.join(blb, und["b"] == blb["node"])
+            .select(F.col("a").alias("node"), "label")
+            .groupBy("node", "label")
+            .agg(F.count(F.lit(1)).alias("c"))
+        )
+        return (
+            votes.groupBy("node")
+            .agg(
+                F.min(
+                    F.struct((-F.col("c")).alias("nc"), F.col("label").alias("label"))
+                ).alias("w")
             )
-            for _ in range(rounds):
-                blb = bc(labels)
-                votes = (
-                    und.join(blb, und["b"] == blb["node"])
-                    .select(F.col("a").alias("node"), "label")
-                    .groupBy("node", "label")
-                    .agg(F.count(F.lit(1)).alias("c"))
-                )
-                winner = (
-                    votes.groupBy("node")
-                    .agg(
-                        F.min(
-                            F.struct(
-                                (-F.col("c")).alias("nc"),
-                                F.col("label").alias("label"),
-                            )
-                        ).alias("w")
-                    )
-                    .select("node", F.col("w.label").alias("label"))
-                )
-                labels = winner.localCheckpoint(eager=True)
-        return labels
-    finally:
-        und.unpersist()
+            .select("node", F.col("w.label").alias("label"))
+        )
+
+    nodes = und.select(F.col("a").alias("node")).distinct()
+    return run_supersteps(
+        nodes.withColumn("label", F.col("node")),
+        step,
+        rounds=rounds,
+        scope_rows=n_edges,
+        static=(und,),
+    )
 
 
 def hits(
@@ -710,71 +763,54 @@ def hits(
     4-joins-per-iteration lineage on every action and the plan depth
     grows linearly with the iteration count.
     """
-    from pyspark import StorageLevel
-
-    from ..functions.numeric import round_half_up
-    from ..partitioning import superstep_scope
-
-    e = edges.select(F.col(src).alias("u"), F.col(dst).alias("v")).persist(
-        StorageLevel.MEMORY_AND_DISK
-    )
+    e = _static_input(edges.select(F.col(src).alias("u"), F.col(dst).alias("v")))
     n_edges = e.count()  # warms the cache; sizes superstep shuffles
     nodes = (
         e.select(F.col("u").alias("node"))
         .unionByName(e.select(F.col("v").alias("node")))
         .distinct()
     )
-    try:
-        with superstep_scope(edges.sparkSession, n_edges):
-            # r14: node-sized score projections and per-step contrib
-            # tables broadcast into the edge joins / score joins when
-            # the graph is driver-known small (guide §3.1) — each
-            # half-step's only exchange is then its sum aggregate.
-            from ..partitioning import state_broadcaster
+    # r14: node-sized score projections and per-step contrib tables
+    # broadcast into the edge joins / score joins when the graph is
+    # driver-known small (guide §3.1) — each half-step's only exchange
+    # is then its sum aggregate.
+    bc = state_broadcaster(n_edges)
 
-            bc = state_broadcaster(n_edges)
-            scores = nodes.select(
-                "node", F.lit(1.0).alias("hub"), F.lit(1.0).alias("auth")
-            ).localCheckpoint(eager=True)
-            for _ in range(iterations):
-                # authority step: sum incoming hub mass
-                contrib = (
-                    e.join(bc(scores.select(F.col("node").alias("u"), "hub")), "u")
-                    .groupBy(F.col("v").alias("node"))
-                    .agg(F.sum("hub").alias("auth_raw"))
-                )
-                scores = (
-                    scores.join(bc(contrib), "node", "left")
-                    .select(
-                        "node",
-                        "hub",
-                        F.coalesce("auth_raw", F.lit(0.0)).alias("auth"),
-                    )
-                )
-                amax = scores.agg(F.max("auth").alias("m"))
-                scores = scores.crossJoin(F.broadcast(amax)).select(
-                    "node", "hub", (F.col("auth") / F.col("m")).alias("auth")
-                )
-                # hub step: sum outgoing authority mass
-                contrib = (
-                    e.join(bc(scores.select(F.col("node").alias("v"), "auth")), "v")
-                    .groupBy(F.col("u").alias("node"))
-                    .agg(F.sum("auth").alias("hub_raw"))
-                )
-                scores = (
-                    scores.join(bc(contrib), "node", "left")
-                    .select(
-                        "node",
-                        F.coalesce("hub_raw", F.lit(0.0)).alias("hub"),
-                        "auth",
-                    )
-                )
-                hmax = scores.agg(F.max("hub").alias("m"))
-                scores = scores.crossJoin(F.broadcast(hmax)).select(
-                    "node", (F.col("hub") / F.col("m")).alias("hub"), "auth"
-                ).localCheckpoint(eager=True)
-    finally:
-        e.unpersist()
+    def step(scores: DataFrame, _) -> DataFrame:
+        # authority step: sum incoming hub mass
+        contrib = (
+            e.join(bc(scores.select(F.col("node").alias("u"), "hub")), "u")
+            .groupBy(F.col("v").alias("node"))
+            .agg(F.sum("hub").alias("auth_raw"))
+        )
+        scores = scores.join(bc(contrib), "node", "left").select(
+            "node", "hub", F.coalesce("auth_raw", F.lit(0.0)).alias("auth")
+        )
+        amax = scores.agg(F.max("auth").alias("m"))
+        scores = scores.crossJoin(F.broadcast(amax)).select(
+            "node", "hub", (F.col("auth") / F.col("m")).alias("auth")
+        )
+        # hub step: sum outgoing authority mass
+        contrib = (
+            e.join(bc(scores.select(F.col("node").alias("v"), "auth")), "v")
+            .groupBy(F.col("u").alias("node"))
+            .agg(F.sum("auth").alias("hub_raw"))
+        )
+        scores = scores.join(bc(contrib), "node", "left").select(
+            "node", F.coalesce("hub_raw", F.lit(0.0)).alias("hub"), "auth"
+        )
+        hmax = scores.agg(F.max("hub").alias("m"))
+        return scores.crossJoin(F.broadcast(hmax)).select(
+            "node", (F.col("hub") / F.col("m")).alias("hub"), "auth"
+        )
+
+    scores = run_supersteps(
+        nodes.select("node", F.lit(1.0).alias("hub"), F.lit(1.0).alias("auth")),
+        step,
+        rounds=iterations,
+        scope_rows=n_edges,
+        static=(e,),
+    )
     return scores.select(
         "node",
         round_half_up(F.col("hub"), digits).alias("hub_score"),
@@ -803,101 +839,59 @@ def personalized_pagerank(
     one row per node, shuffles sized by ``superstep_scope``, results
     rounded so the fixed-depth SQL recursion is the oracle.
     """
-    from pyspark import StorageLevel
-
-    from ..functions.numeric import round_half_up
-    from ..partitioning import superstep_scope
-
-    nodes = (
-        edges.select(F.col(src).alias("node"))
-        .union(edges.select(F.col(dst).alias("node")))
-        .distinct()
-        .persist(StorageLevel.MEMORY_AND_DISK)
-    )
-    n_nodes = nodes.count()
+    nodes, n_nodes, out_deg, e = _rank_inputs(edges, src, dst)
     # Seeds outside the edge-derived node set carry no mass (base is
     # built from edge endpoints), so count only the EFFECTIVE seeds —
     # otherwise the restart vector sums to < 1 and every rank deflates
     # (ADVICE r04). An empty effective seed set has no defined restart
     # distribution: fail loudly instead of ZeroDivisionError.
-    seed_set = (
-        seeds.select(F.col(node_col).alias("node"))
-        .distinct()
-        .join(nodes, "node", "semi")
-        .persist()
+    seed_set = _static_input(
+        seeds.select(F.col(node_col).alias("node")).distinct().join(nodes, "node", "semi")
     )
     n_seeds = seed_set.count()
     if n_seeds == 0:
-        seed_set.unpersist()
-        nodes.unpersist()
+        for df in (nodes, seed_set, out_deg, e):
+            df.unpersist()
         raise ValueError(
             "personalized_pagerank: no seed node appears in the edge "
             "list — the restart distribution is undefined"
         )
-    base = nodes.join(
-        seed_set.withColumn("__is_seed", F.lit(True)), "node", "left"
-    ).select(
-        "node",
-        F.when(F.col("__is_seed"), F.lit(1.0 / n_seeds))
-        .otherwise(F.lit(0.0))
-        .alias("v"),
-    ).persist(StorageLevel.MEMORY_AND_DISK)
-    out_deg = (
-        edges.groupBy(F.col(src).alias("node"))
-        .agg(F.count(F.lit(1)).alias("deg"))
-        .persist(StorageLevel.MEMORY_AND_DISK)
+    base = _static_input(
+        nodes.join(seed_set.withColumn("__is_seed", F.lit(True)), "node", "left").select(
+            "node",
+            F.when(F.col("__is_seed"), F.lit(1.0 / n_seeds)).otherwise(F.lit(0.0)).alias("v"),
+        )
     )
-    e = edges.select(F.col(src).alias("node"), F.col(dst).alias("dst_node")).persist(
-        StorageLevel.MEMORY_AND_DISK
-    )
-    try:
-        with superstep_scope(edges.sparkSession, n_nodes):
-            # r14: same plan surgery as ``pagerank`` — the
-            # contrib-aggregate + base-left-join pair fused into one
-            # union + sum (base carries (node, v), so v rides the union
-            # instead of a join); state does NOT broadcast, same
-            # ablation evidence as ``pagerank``.
-            ranks = base.select("node", F.col("v").alias("rank")).localCheckpoint(
-                eager=True
+
+    def step(ranks: DataFrame, _) -> DataFrame:
+        msgs, dangling = _rank_messages(ranks, out_deg, e)
+        no_v = F.lit(None).cast("double")
+        return (
+            msgs.select("node", no_v.alias("v"), "c")
+            .unionByName(base.select("node", "v", no_v.alias("c")))
+            .groupBy("node")
+            .agg(F.max("v").alias("v"), F.sum("c").alias("contrib"))
+            .crossJoin(dangling)
+            .select(
+                "node",
+                (
+                    F.lit(1.0 - damping) * F.col("v")
+                    + F.lit(damping)
+                    * (
+                        F.col("__dangling") * F.col("v")
+                        + F.coalesce(F.col("contrib"), F.lit(0.0))
+                    )
+                ).alias("rank"),
             )
-            for _ in range(iterations):
-                with_deg = ranks.join(out_deg, "node", "left")
-                msgs = e.join(with_deg, "node").select(
-                    F.col("dst_node").alias("node"),
-                    F.lit(None).cast("double").alias("v"),
-                    (F.col("rank") / F.col("deg")).alias("c"),
-                )
-                dangling_df = with_deg.filter(F.col("deg").isNull()).agg(
-                    F.coalesce(F.sum("rank"), F.lit(0.0)).alias("__dangling")
-                )
-                ranks = (
-                    msgs.unionByName(
-                        base.select(
-                            "node", "v", F.lit(None).cast("double").alias("c")
-                        )
-                    )
-                    .groupBy("node")
-                    .agg(
-                        F.max("v").alias("v"),
-                        F.sum("c").alias("contrib"),
-                    )
-                    .crossJoin(F.broadcast(dangling_df))
-                    .select(
-                        "node",
-                        (
-                            F.lit(1.0 - damping) * F.col("v")
-                            + F.lit(damping)
-                            * (
-                                F.col("__dangling") * F.col("v")
-                                + F.coalesce(F.col("contrib"), F.lit(0.0))
-                            )
-                        ).alias("rank"),
-                    )
-                    .localCheckpoint(eager=True)
-                )
-    finally:
-        for df in (nodes, seed_set, base, out_deg, e):
-            df.unpersist()
+        )
+
+    ranks = run_supersteps(
+        base.select("node", F.col("v").alias("rank")),
+        step,
+        rounds=iterations,
+        scope_rows=n_nodes,
+        static=(nodes, seed_set, base, out_deg, e),
+    )
     return ranks.select("node", round_half_up("rank", 8).alias("ppr"))
 
 
@@ -917,54 +911,17 @@ def closeness_sampled(
     O(V·E); k seeds cost k·O(E·diameter) and rank the hubs just as
     well).
 
-    Same frontier shape as ``bfs_distances`` with the state keyed by
-    (seed, node): per hop one edge⋈frontier join, a distinct, and an
-    anti-join against the visited set; every superstep ends in an eager
-    ``localCheckpoint`` under ``superstep_scope``. State is
-    O(seeds × reachable nodes) — the caller bounds it by choosing the
-    seed count; hop-bounding keeps each expansion one shuffle of
-    frontier-sized rows.
+    The same frontier BFS as ``bfs_distances`` (``_bfs``) with the state
+    keyed by (seed, node). State is O(seeds × reachable nodes) — the
+    caller bounds it by choosing the seed count; hop-bounding keeps each
+    expansion one shuffle of frontier-sized rows.
     """
-    from pyspark import StorageLevel
-
-    from ..functions.numeric import round_half_up
-    from ..partitioning import superstep_scope
-
-    und = (
-        edges.select(F.col(src).alias("a"), F.col(dst).alias("b"))
-        .union(edges.select(F.col(dst).alias("a"), F.col(src).alias("b")))
+    start = (
+        seeds.select(F.col(node_col).alias("seed"))
         .distinct()
-        .persist(StorageLevel.MEMORY_AND_DISK)
+        .select("seed", F.col("seed").alias("node"))
     )
-    n_edges = und.count()  # warms the cache; sizes superstep shuffles
-
-    try:
-        with superstep_scope(edges.sparkSession, n_edges):
-            # (r14 ablation: per-hop broadcast builds of the frontier /
-            # visited set measured slower than the small exchanges they
-            # replace — the loop keeps plain shuffle joins.)
-            dist = (
-                seeds.select(F.col(node_col).alias("seed"))
-                .distinct()
-                .select("seed", F.col("seed").alias("node"), F.lit(0).alias("dist"))
-                .localCheckpoint(eager=True)
-            )
-            frontier = dist.select("seed", "node")
-            for hop in range(1, max_hops + 1):
-                nxt = (
-                    frontier.join(und, frontier["node"] == und["a"])
-                    .select("seed", F.col("b").alias("node"))
-                    .distinct()
-                    .join(dist.select("seed", "node"), ["seed", "node"], "left_anti")
-                    .withColumn("dist", F.lit(hop))
-                    .localCheckpoint(eager=True)
-                )
-                if nxt.limit(1).count() == 0:
-                    break
-                dist = dist.union(nxt).localCheckpoint(eager=True)
-                frontier = nxt.select("seed", "node")
-    finally:
-        und.unpersist()
+    dist = _bfs(edges, start, src, dst, max_hops, keys=("seed",))
     reached = F.count(F.lit(1)) - 1
     total = F.sum("dist")
     return dist.groupBy("seed").agg(
@@ -1016,18 +973,10 @@ def walk_corpus(
     dead end keep their prefix. Supersteps checkpoint like every other
     iterative operator here.
     """
-    from pyspark import StorageLevel
-
-    from ..partitioning import superstep_scope
-
-    und = (
-        edges.select(F.col(src).alias("a"), F.col(dst).alias("b"))
-        .union(edges.select(F.col(dst).alias("a"), F.col(src).alias("b")))
-        .distinct()
-        .withColumn(
+    und = _static_input(
+        _undirected(edges, src, dst).withColumn(
             "__salt", (F.abs(F.xxhash64("b")) % n_salts).cast("int")
         )
-        .persist(StorageLevel.MEMORY_AND_DISK)
     )
     n_edges = und.count()  # warms the cache; sizes superstep shuffles
     walk_id = (
@@ -1035,85 +984,59 @@ def walk_corpus(
         if n_walks == 1
         else F.concat_ws("#", F.col("seed"), F.col("w"))
     )
-    try:
-        with superstep_scope(edges.sparkSession, n_edges):
-            walks = (
-                seeds.select(F.col(node_col).alias("seed"))
-                .distinct()
-                .select(
-                    "seed",
-                    F.explode(
-                        F.sequence(F.lit(0), F.lit(n_walks - 1))
-                    ).alias("w"),
-                )
-                .select(
-                    walk_id.alias("walk_id"),
-                    "w",
-                    F.col("seed").alias("cur"),
-                    F.col("seed").alias("path"),
-                    F.lit(1).alias("n_nodes"),
-                )
-                .localCheckpoint(eager=True)
+
+    def step(walks: DataFrame, t: int) -> DataFrame:
+        h = F.md5(F.concat_ws("|", F.col("cur"), F.col("b"), F.lit(t), F.col("w")))
+        frontier = walks.select(
+            "walk_id", "w", "cur", "path", "n_nodes",
+            F.explode(F.sequence(F.lit(0), F.lit(n_salts - 1))).alias("__salt"),
+        )
+        partial = (
+            frontier.join(
+                und,
+                (frontier["cur"] == und["a"]) & (frontier["__salt"] == und["__salt"]),
+                "left",
             )
-            for t in range(1, steps + 1):
-                h = F.md5(
-                    F.concat_ws(
-                        "|", F.col("cur"), F.col("b"), F.lit(t), F.col("w")
-                    )
-                )
-                frontier = walks.select(
-                    "walk_id", "w", "cur", "path", "n_nodes",
-                    F.explode(
-                        F.sequence(F.lit(0), F.lit(n_salts - 1))
-                    ).alias("__salt"),
-                )
-                partial = (
-                    frontier.join(
-                        und,
-                        (frontier["cur"] == und["a"])
-                        & (frontier["__salt"] == und["__salt"]),
-                        "left",
-                    )
-                    .groupBy(
-                        "walk_id", "w", "cur", "path", "n_nodes",
-                        frontier["__salt"],
-                    )
-                    .agg(
-                        F.min(
-                            F.when(
-                                F.col("b").isNotNull(),
-                                F.struct(h.alias("h"), F.col("b").alias("b")),
-                            )
-                        ).alias("pick")
-                    )
-                )
-                nxt = (
-                    partial.groupBy("walk_id", "w", "cur", "path", "n_nodes")
-                    .agg(F.min("pick").alias("pick"))
-                    .select(
-                        "walk_id",
-                        "w",
-                        "cur",
-                        F.col("pick.b").alias("nxt"),
-                        "path",
-                        "n_nodes",
-                    )
-                )
-                walks = nxt.select(
-                    "walk_id",
-                    "w",
-                    F.coalesce("nxt", F.col("cur")).alias("cur"),
+            .groupBy("walk_id", "w", "cur", "path", "n_nodes", frontier["__salt"])
+            .agg(
+                F.min(
                     F.when(
-                        F.col("nxt").isNotNull(),
-                        F.concat_ws(" ", F.col("path"), F.col("nxt")),
-                    ).otherwise(F.col("path")).alias("path"),
-                    (
-                        F.col("n_nodes")
-                        + F.col("nxt").isNotNull().cast("int")
-                    ).alias("n_nodes"),
-                ).localCheckpoint(eager=True)
-    finally:
-        und.unpersist()
+                        F.col("b").isNotNull(),
+                        F.struct(h.alias("h"), F.col("b").alias("b")),
+                    )
+                ).alias("pick")
+            )
+        )
+        nxt = (
+            partial.groupBy("walk_id", "w", "cur", "path", "n_nodes")
+            .agg(F.min("pick").alias("pick"))
+            .select("walk_id", "w", "cur", F.col("pick.b").alias("nxt"), "path", "n_nodes")
+        )
+        return nxt.select(
+            "walk_id",
+            "w",
+            F.coalesce("nxt", F.col("cur")).alias("cur"),
+            F.when(
+                F.col("nxt").isNotNull(), F.concat_ws(" ", F.col("path"), F.col("nxt"))
+            ).otherwise(F.col("path")).alias("path"),
+            (F.col("n_nodes") + F.col("nxt").isNotNull().cast("int")).alias("n_nodes"),
+        )
+
+    init = (
+        seeds.select(F.col(node_col).alias("seed"))
+        .distinct()
+        .select("seed", F.explode(F.sequence(F.lit(0), F.lit(n_walks - 1))).alias("w"))
+        .select(
+            walk_id.alias("walk_id"),
+            "w",
+            F.col("seed").alias("cur"),
+            F.col("seed").alias("path"),
+            F.lit(1).alias("n_nodes"),
+        )
+    )
+    walks = run_supersteps(
+        init, step, rounds=steps, scope_rows=n_edges, static=(und,)
+    )
     return walks.select("walk_id", "path", "n_nodes")
 
 
@@ -1138,13 +1061,7 @@ def degree_assortativity(
     otherwise; a forced hint here would override AQE's size check and
     OOM the executors on a billion-node graph.
     """
-    from ..functions.numeric import round_half_up
-
-    und = (
-        edges.select(F.col(src).alias("a"), F.col(dst).alias("b"))
-        .union(edges.select(F.col(dst).alias("a"), F.col(src).alias("b")))
-        .distinct()
-    )
+    und = _undirected(edges, src, dst)
     deg = und.groupBy(F.col("a").alias("node")).agg(
         F.count(F.lit(1)).alias("deg")
     )
@@ -1181,16 +1098,10 @@ def clustering_coefficients(
     hub-safe orientation) with the degree table; nodes of degree < 2
     emit coefficient 0 by convention.
     """
-    from ..functions.numeric import round_half_up
-
     tri = triangle_counts(edges, src, dst).select(
         "node", F.col("n_triangles")
     )
-    und = (
-        edges.select(F.col(src).alias("a"), F.col(dst).alias("b"))
-        .union(edges.select(F.col(dst).alias("a"), F.col(src).alias("b")))
-        .distinct()
-    )
+    und = _undirected(edges, src, dst)
     deg = und.groupBy(F.col("a").alias("node")).agg(
         F.count(F.lit(1)).alias("degree")
     )
@@ -1241,15 +1152,7 @@ def modularity(
     float-summation order anywhere). Output one row:
     (n_communities, n_edges, modularity).
     """
-    from ..functions.numeric import round_half_up
-
-    und = (
-        edges.select(F.col(src).alias("a"), F.col(dst).alias("b"))
-        .union(edges.select(F.col(dst).alias("a"), F.col(src).alias("b")))
-        .distinct()
-    )
-    from ..partitioning import state_broadcaster
-
+    und = _undirected(edges, src, dst)
     bc = (
         state_broadcaster(n_state_hint)
         if n_state_hint is not None
@@ -1313,12 +1216,7 @@ def bridge_edges(
     import logging
 
     logger = logging.getLogger(__name__)
-    und = (
-        edges.select(F.col(src).alias("a"), F.col(dst).alias("b"))
-        .union(edges.select(F.col(dst).alias("a"), F.col(src).alias("b")))
-        .filter(F.col("a") != F.col("b"))
-        .distinct()
-    )
+    und = _undirected(edges, src, dst, drop_loops=True)
     canon = und.filter(F.col("a") < F.col("b"))
     deg = und.groupBy(F.col("a").alias("c")).agg(
         F.count(F.lit(1)).alias("__deg")
@@ -1377,13 +1275,7 @@ def degree_powerlaw_fit(
     partitioning-deterministic. Output one row:
     (n_nodes_fit, dmin, alpha, max_degree).
     """
-    from ..functions.numeric import dsum, round_half_up
-
-    und = (
-        edges.select(F.col(src).alias("a"), F.col(dst).alias("b"))
-        .union(edges.select(F.col(dst).alias("a"), F.col(src).alias("b")))
-        .distinct()
-    )
+    und = _undirected(edges, src, dst)
     deg = und.groupBy(F.col("a").alias("node")).agg(
         F.count(F.lit(1)).alias("deg")
     )
@@ -1428,14 +1320,7 @@ def rich_club_coefficient(
     adds materialization barriers (the triangle_counts/copurchase
     lesson from r14). Left un-persisted.
     """
-    from ..functions.numeric import round_half_up
-
-    und = (
-        edges.select(F.col(src).alias("a"), F.col(dst).alias("b"))
-        .union(edges.select(F.col(dst).alias("a"), F.col(src).alias("b")))
-        .filter(F.col("a") != F.col("b"))
-        .distinct()
-    )
+    und = _undirected(edges, src, dst, drop_loops=True)
     deg = und.groupBy(F.col("a").alias("node")).agg(
         F.count(F.lit(1)).alias("deg")
     )
@@ -1487,45 +1372,7 @@ def edge_triangle_support(
 
     Returns (u, v, support) with u < v for every edge in >= 1 triangle.
     """
-    und = (
-        edges.select(
-            F.least(F.col(src), F.col(dst)).alias("u"),
-            F.greatest(F.col(src), F.col(dst)).alias("v"),
-        )
-        .where(F.col("u") != F.col("v"))
-        .distinct()
-    )
-    sym = und.unionByName(und.select(F.col("v").alias("u"), F.col("u").alias("v")))
-    deg = sym.groupBy("u").agg(F.count(F.lit(1)).alias("deg"))
-    # r14: persist the oriented edge table — exactly as triangle_counts
-    # already does — so the wedge self-join's two sides (and
-    # neighbor_jaccard's reuse of this whole DAG) read one materialized
-    # table instead of re-running the two orientation joins per branch
-    # (the un-persisted plan carried 35 Exchanges / 8 SortMergeJoins in
-    # neighbor_jaccard; see plans/r14/).
-    # Lifecycle (r15, VERDICT r14 #8): bare persist() defaults to
-    # MEMORY_AND_DISK, so eviction under pressure spills instead of
-    # recomputing; cleanup is caller-scoped (clearCache per query) —
-    # the result is lazily returned so there is no in-operator
-    # unpersist point. register_session_cache is for driver-side dict
-    # memos and does not apply here.
-    oriented = (
-        sym.join(deg.select(F.col("u"), F.col("deg").alias("du")), "u")
-        .join(deg.select(F.col("u").alias("v"), F.col("deg").alias("dv")), "v")
-        .where(
-            (F.col("du") < F.col("dv"))
-            | ((F.col("du") == F.col("dv")) & (F.col("u") < F.col("v")))
-        )
-        .select("u", "v")
-        .persist()
-    )
-    wedges = (
-        oriented.select(F.col("u").alias("c"), F.col("v").alias("x"))
-        .join(oriented.select(F.col("u").alias("c"), F.col("v").alias("y")), "c")
-        .where(F.col("x") < F.col("y"))
-    )
-    closing = sym.select(F.col("u").alias("x"), F.col("v").alias("y"))
-    tri = wedges.join(closing, ["x", "y"])
+    tri = _triangles(edges, src, dst)
     sides = tri.select(
         F.array(
             F.struct(
@@ -1556,19 +1403,8 @@ def neighbor_jaccard(
     One support computation + one degree aggregate joined twice —
     all keyed equi-joins.
     """
-    from ..functions.numeric import round_half_up
-
     sup = edge_triangle_support(edges, src, dst)
-    und = (
-        edges.select(
-            F.least(F.col(src), F.col(dst)).alias("u"),
-            F.greatest(F.col(src), F.col(dst)).alias("v"),
-        )
-        .where(F.col("u") != F.col("v"))
-        .distinct()
-    )
-    sym = und.unionByName(und.select(F.col("v").alias("u"), F.col("u").alias("v")))
-    deg = sym.groupBy("u").agg(F.count(F.lit(1)).alias("deg"))
+    sym, deg = _sym(_canonical(edges, src, dst))
     return (
         sup.join(deg.select(F.col("u"), F.col("deg").alias("du")), "u")
         .join(deg.select(F.col("u").alias("v"), F.col("deg").alias("dv")), "v")
@@ -1616,22 +1452,11 @@ def adamic_adar_topk(
     import logging
 
     logger = logging.getLogger(__name__)
-    und = (
-        edges.select(
-            F.least(F.col(src), F.col(dst)).alias("u"),
-            F.greatest(F.col(src), F.col(dst)).alias("v"),
-        )
-        .where(F.col("u") != F.col("v"))
-        .distinct()
-        # Referenced six times downstream (deg, both wedge sides, the
-        # non-adjacency anti-join, twice via sym's self-union) — without
-        # this the edge distinct's shuffle re-executes per branch.
-        .localCheckpoint(eager=False)
-    )
-    sym = und.unionByName(
-        und.select(F.col("v").alias("u"), F.col("u").alias("v"))
-    )
-    deg = sym.groupBy("u").agg(F.count(F.lit(1)).alias("deg"))
+    # Referenced six times downstream (deg, both wedge sides, the
+    # non-adjacency anti-join, twice via sym's self-union) — without
+    # this the edge distinct's shuffle re-executes per branch.
+    und = _canonical(edges, src, dst).localCheckpoint(eager=False)
+    sym, deg = _sym(und)
     hot = deg.where(F.col("deg") > max_center_degree).localCheckpoint(
         eager=True
     )
@@ -1651,8 +1476,6 @@ def adamic_adar_topk(
     # wedge fan-out + partial aggregation onto the streamed side's few
     # input partitions (measured 9 s → 80 s at sf0.1) — the exchange IS
     # what spreads the wedge work (OPTIMIZATION_r14.md).
-    from ..partitioning import state_broadcaster
-
     bc = state_broadcaster(2 * und.count())
     centers = (
         deg.join(hot.select("u"), "u", "left_anti")
@@ -1851,17 +1674,7 @@ def type_mixing_matrix(
     table. Returns one row per (type_a, type_b) cell with the SAME
     assortativity_r on each (flat driver-friendly shape).
     """
-    und = (
-        edges.select(
-            F.least(F.col(src), F.col(dst)).alias("u"),
-            F.greatest(F.col(src), F.col(dst)).alias("v"),
-        )
-        .where(F.col("u") != F.col("v"))
-        .distinct()
-    )
-    sym = und.unionByName(
-        und.select(F.col("v").alias("u"), F.col("u").alias("v"))
-    )
+    sym, _ = _sym(_canonical(edges, src, dst))
     # r14: the cell matrix is bounded (≤ |types|² rows) but feeds FIVE
     # consumers (tot, both margins, the trace, the final read-out) —
     # un-materialized, each re-ran the corpus-sized distinct+aggregate
@@ -1955,58 +1768,48 @@ def katz_centrality(
     is why the per-round checkpoint stays).
     State is one BIGINT row per node.
     """
-    und = (
-        edges.select(F.col(src).alias("a"), F.col(dst).alias("b"))
-        .union(edges.select(F.col(dst).alias("a"), F.col(src).alias("b")))
-        .where(F.col("a") != F.col("b"))
-        .distinct()
-        .persist()
-    )
-    nodes = und.select(F.col("a").alias("node")).distinct()
+    und = _static_input(_undirected(edges, src, dst, drop_loops=True))
     n_edges = und.count()  # warms the cache; sizes superstep shuffles
-    from ..partitioning import state_broadcaster, superstep_scope
+    bc = state_broadcaster(n_edges)
 
-    try:
-        with superstep_scope(edges.sparkSession, n_edges):
-            # r14: scores broadcast into the neighbor join when the
-            # graph is driver-known small, and the neighbor-sum + nodes
-            # left-join pair is fused into one union + integer sum (a
-            # null row per node makes the null-ignoring sum reproduce
-            # the left join's coalesce exactly; integer sums are
-            # order-independent). ~4 Exchanges/round → 1.
-            bc = state_broadcaster(n_edges)
-            nodes = nodes.localCheckpoint(eager=True)
-            scores = nodes.withColumn(
-                "katz_micro", F.lit(1_000_000).cast("long")
-            ).localCheckpoint(eager=True)
-            for _ in range(rounds):
-                bsc = bc(scores)
-                msgs = und.join(bsc, und["b"] == bsc["node"]).select(
-                    F.col("a").alias("node"), F.col("katz_micro").alias("__s")
-                )
-                scores = (
-                    msgs.unionByName(
-                        nodes.select(
-                            "node", F.lit(None).cast("long").alias("__s")
-                        )
-                    )
-                    .groupBy("node")
-                    .agg(F.sum("__s").alias("__s"))
-                    .select(
-                        "node",
-                        (
-                            F.lit(1_000_000).cast("long")
-                            + F.floor(
-                                F.coalesce(F.col("__s"), F.lit(0))
-                                / F.lit(alpha_inv)
-                            ).cast("long")
-                        ).alias("katz_micro"),
-                    )
-                    .localCheckpoint(eager=True)
-                )
-        return scores
-    finally:
-        und.unpersist()
+    def step(scores: DataFrame, _) -> DataFrame:
+        return _neighbor_sum(und, bc(scores), scores, "katz_micro").select(
+            "node",
+            (
+                F.lit(1_000_000).cast("long")
+                + F.floor(F.coalesce(F.col("__s"), F.lit(0)) / F.lit(alpha_inv)).cast("long")
+            ).alias("katz_micro"),
+        )
+
+    nodes = und.select(F.col("a").alias("node")).distinct()
+    return run_supersteps(
+        nodes.withColumn("katz_micro", F.lit(1_000_000).cast("long")),
+        step,
+        rounds=rounds,
+        scope_rows=n_edges,
+        static=(und,),
+    )
+
+
+def _neighbor_sum(und: DataFrame, hinted: DataFrame, state: DataFrame, col: str) -> DataFrame:
+    """(node, __s): the exact integer sum of ``col`` over each node's
+    neighbors in ``und`` (NULL when none), for every node of ``state``.
+
+    r14: ``hinted`` is the state, broadcast when the graph is
+    driver-known small, and the neighbor-sum + nodes left-join pair is
+    fused into one union + integer sum (a null row per node makes the
+    null-ignoring sum reproduce the left join's coalesce exactly;
+    integer sums are order-independent). ~4 Exchanges/round → 1. Every
+    round's state holds every node, so it also supplies the null rows.
+    """
+    msgs = und.join(hinted, und["b"] == hinted["node"]).select(
+        F.col("a").alias("node"), F.col(col).alias("__s")
+    )
+    return (
+        msgs.unionByName(state.select("node", F.lit(None).cast("long").alias("__s")))
+        .groupBy("node")
+        .agg(F.sum("__s").alias("__s"))
+    )
 
 
 def link_prediction_eval(
@@ -2035,14 +1838,7 @@ def link_prediction_eval(
     integer counts; double division over exact inputs, rounded at
     ``digits``.
     """
-    canon = (
-        edges.select(
-            F.least(F.col(src), F.col(dst)).alias("a"),
-            F.greatest(F.col(src), F.col(dst)).alias("b"),
-        )
-        .where(F.col("a") != F.col("b"))
-        .distinct()
-    )
+    canon = _canonical(edges, src, dst, cols=("a", "b"))
     frac = (
         F.conv(
             F.substring(F.md5(F.concat_ws("|", "a", "b")), 1, 8), 16, 10
@@ -2141,87 +1937,60 @@ def spectral_radius_estimate(
     localCheckpoint per superstep); the Rayleigh read-off is one 1-row
     aggregate; the read-out is TakeOrdered(top_k).
     """
-    und = (
-        edges.select(F.col(src).alias("a"), F.col(dst).alias("b"))
-        .union(edges.select(F.col(dst).alias("a"), F.col(src).alias("b")))
-        .where(F.col("a") != F.col("b"))
-        .distinct()
-        .persist()
-    )
-    nodes = und.select(F.col("a").alias("node")).distinct()
+    und = _static_input(_undirected(edges, src, dst, drop_loops=True))
     n_edges = und.count()
-    from ..partitioning import state_broadcaster, superstep_scope
+    bc = state_broadcaster(n_edges)
+    hist = []
 
-    try:
-        with superstep_scope(edges.sparkSession, n_edges):
-            # r14: scores broadcast into the neighbor join when the
-            # graph is driver-known small; neighbor-sum + nodes
-            # left-join fused into one union + integer sum (exact,
-            # order-independent — the katz_centrality shape).
-            bc = state_broadcaster(n_edges)
-            nodes = nodes.localCheckpoint(eager=True)
-            hist = []
-            x = nodes.withColumn("x", F.lit(1).cast("long")).localCheckpoint(
-                eager=True
+    def step(x: DataFrame, _) -> DataFrame:
+        hist.append(x)
+        return _neighbor_sum(und, bc(x), x, "x").select(
+            "node", F.coalesce(F.col("__s"), F.lit(0)).cast("long").alias("x")
+        )
+
+    nodes = und.select(F.col("a").alias("node")).distinct()
+    x_last = run_supersteps(
+        nodes.withColumn("x", F.lit(1).cast("long")),
+        step,
+        rounds=rounds,
+        scope_rows=n_edges,
+        static=(und,),
+    )
+    x_prev = hist[-1]
+    both = x_last.select(F.col("node"), F.col("x").alias("xl")).join(
+        x_prev.select(F.col("node"), F.col("x").alias("xp")), "node"
+    )
+    ray = both.agg(
+        F.count(F.lit(1)).alias("n_nodes"),
+        F.sum(
+            (F.col("xl").cast("decimal(38,0)") * F.col("xp")).cast(
+                "decimal(38,0)"
             )
-            hist.append(x)
-            for _ in range(rounds):
-                bx = bc(x)
-                msgs = und.join(bx, und["b"] == bx["node"]).select(
-                    F.col("a").alias("node"), F.col("x").alias("__s")
-                )
-                x = (
-                    msgs.unionByName(
-                        nodes.select(
-                            "node", F.lit(None).cast("long").alias("__s")
-                        )
-                    )
-                    .groupBy("node")
-                    .agg(F.sum("__s").alias("__s"))
-                    .select(
-                        "node",
-                        F.coalesce(F.col("__s"), F.lit(0)).cast("long").alias("x"),
-                    )
-                    .localCheckpoint(eager=True)
-                )
-                hist.append(x)
-        x_last, x_prev = hist[-1], hist[-2]
-        both = x_last.select(F.col("node"), F.col("x").alias("xl")).join(
-            x_prev.select(F.col("node"), F.col("x").alias("xp")), "node"
-        )
-        ray = both.agg(
-            F.count(F.lit(1)).alias("n_nodes"),
-            F.sum(
-                (F.col("xl").cast("decimal(38,0)") * F.col("xp")).cast(
-                    "decimal(38,0)"
-                )
-            ).alias("__num"),
-            F.sum(
-                (F.col("xp").cast("decimal(38,0)") * F.col("xp")).cast(
-                    "decimal(38,0)"
-                )
-            ).alias("__den"),
-            F.sum(F.col("xl").cast("decimal(38,0)")).alias("__tot"),
-        )
-        top = x_last.orderBy(F.col("x").desc(), F.col("node")).limit(top_k)
-        return (
-            top.crossJoin(F.broadcast(ray))
-            .select(
-                "node",
-                round_half_up(
-                    F.col("x").cast("double")
-                    / F.col("__tot").cast("double"),
-                    9,
-                ).alias("x_share"),
-                round_half_up(
-                    F.col("__num").cast("double") / F.col("__den").cast("double"),
-                    digits,
-                ).alias("lambda_est"),
-                F.col("n_nodes"),
+        ).alias("__num"),
+        F.sum(
+            (F.col("xp").cast("decimal(38,0)") * F.col("xp")).cast(
+                "decimal(38,0)"
             )
+        ).alias("__den"),
+        F.sum(F.col("xl").cast("decimal(38,0)")).alias("__tot"),
+    )
+    top = x_last.orderBy(F.col("x").desc(), F.col("node")).limit(top_k)
+    return (
+        top.crossJoin(F.broadcast(ray))
+        .select(
+            "node",
+            round_half_up(
+                F.col("x").cast("double")
+                / F.col("__tot").cast("double"),
+                9,
+            ).alias("x_share"),
+            round_half_up(
+                F.col("__num").cast("double") / F.col("__den").cast("double"),
+                digits,
+            ).alias("lambda_est"),
+            F.col("n_nodes"),
         )
-    finally:
-        und.unpersist()
+    )
 
 
 def effective_diameter_sampled(
@@ -2248,46 +2017,12 @@ def effective_diameter_sampled(
     histogram over the bounded hop domain (≤ max_hops rows) — windows
     touch only that bounded table.
     """
-    from pyspark.sql import Window
-
-    from ..functions.numeric import round_half_up
-    from ..partitioning import superstep_scope
-
-    und = (
-        edges.select(F.col(src).alias("a"), F.col(dst).alias("b"))
-        .union(edges.select(F.col(dst).alias("a"), F.col(src).alias("b")))
+    start = (
+        seeds.select(F.col(node_col).alias("seed"))
         .distinct()
-        .persist()
+        .select("seed", F.col("seed").alias("node"))
     )
-    n_edges = und.count()
-
-    try:
-        with superstep_scope(edges.sparkSession, n_edges):
-            # (r14 ablation: per-hop broadcast builds measured slower
-            # than the small exchanges — plain shuffle joins kept, same
-            # evidence as ``closeness_sampled``.)
-            dist = (
-                seeds.select(F.col(node_col).alias("seed"))
-                .distinct()
-                .select("seed", F.col("seed").alias("node"), F.lit(0).alias("dist"))
-                .localCheckpoint(eager=True)
-            )
-            frontier = dist.select("seed", "node")
-            for hop in range(1, max_hops + 1):
-                nxt = (
-                    frontier.join(und, frontier["node"] == und["a"])
-                    .select("seed", F.col("b").alias("node"))
-                    .distinct()
-                    .join(dist.select("seed", "node"), ["seed", "node"], "left_anti")
-                    .withColumn("dist", F.lit(hop))
-                    .localCheckpoint(eager=True)
-                )
-                if nxt.limit(1).count() == 0:
-                    break
-                dist = dist.union(nxt).localCheckpoint(eager=True)
-                frontier = nxt.select("seed", "node")
-    finally:
-        und.unpersist()
+    dist = _bfs(edges, start, src, dst, max_hops, keys=("seed",))
     hist = (
         dist.filter(F.col("dist") > 0)
         .groupBy("dist")
@@ -2351,12 +2086,7 @@ def node2vec_transition_weights(
     runtime exchange reuse already covers the duplication and the
     checkpoints serialize work the lazy plan overlaps. Left lazy.
     """
-    und = (
-        edges.select(F.col(src).alias("a"), F.col(dst).alias("b"))
-        .union(edges.select(F.col(dst).alias("a"), F.col(src).alias("b")))
-        .where(F.col("a") != F.col("b"))
-        .distinct()
-    )
+    und = _undirected(edges, src, dst, drop_loops=True)
     pairs = (
         und.select(F.col("a").alias("prev"), F.col("b").alias("cur"))
         .orderBy(F.md5(F.concat_ws("|", "a", "b")).asc())

@@ -14,6 +14,10 @@ Spark-first design:
   already ride on the edge row as FKs, so no payload join is needed at
   all — cheaper than the reference's inner 3-way join and equivalent
   because node identifiers are unique by C1 construction);
+- when a label's export identifier is not its declared key (identifier
+  detection instead of ``NodeSpec.id_col``), the FK holds the key, not
+  the identifier: that endpoint is translated with the reference's inner
+  join on the key, projecting only (key, identifier);
 - sentinel endpoint filtering (P4) is a pushdown-friendly predicate
   applied BEFORE the joins (filter early, join less);
 - AQE picks broadcast-hash for small endpoint sides (Region/Nation-sized
@@ -63,11 +67,26 @@ def export_relationship_table(
     # after fetching, :398-403 — same result, less join input).
     edges = sentinel_filter(edges, spec.src_key, spec.tgt_key)
 
-    if validate_endpoints:
+    declared = view.declared_identifiers()
+    src_ref, tgt_ref = spec.src_key, spec.tgt_key
+    src_key_col = declared.get(spec.src_label, src_id_prop)
+    tgt_key_col = declared.get(spec.tgt_label, tgt_id_prop)
+    if src_key_col != src_id_prop:
+        edges, src_ref = _key_to_identifier(
+            edges, view.nodes[spec.src_label], spec.src_key, src_key_col,
+            src_id_prop, "__src_id",
+        )
+    elif validate_endpoints:
         src_nodes = view.nodes[spec.src_label].select(F.col(src_id_prop).alias(spec.src_key))
         # Semi-joins: existence only, no payload — Catalyst prunes the
         # endpoint scans to the single id column.
         edges = edges.join(src_nodes, spec.src_key, "left_semi")
+    if tgt_key_col != tgt_id_prop:
+        edges, tgt_ref = _key_to_identifier(
+            edges, view.nodes[spec.tgt_label], spec.tgt_key, tgt_key_col,
+            tgt_id_prop, "__tgt_id",
+        )
+    elif validate_endpoints:
         tgt_nodes = view.nodes[spec.tgt_label].select(F.col(tgt_id_prop).alias("__tgt_id"))
         edges = edges.join(
             tgt_nodes, edges[spec.tgt_key] == tgt_nodes["__tgt_id"], "left_semi"
@@ -75,10 +94,23 @@ def export_relationship_table(
 
     props = sorted(spec.props)
     return edges.select(
-        F.col(spec.src_key).alias(src_col),
-        F.col(spec.tgt_key).alias(tgt_col),
+        F.col(src_ref).alias(src_col),
+        F.col(tgt_ref).alias(tgt_col),
         *[F.col(p) for p in props],
     )
+
+
+def _key_to_identifier(
+    edges: DataFrame, nodes: DataFrame, fk: str, key_col: str, id_prop: str, out: str
+) -> tuple[DataFrame, str]:
+    """Replace an endpoint's key with its export identifier: inner join
+    on the key (``neo4j_export.py:362-369``) against the nodes whose
+    identifier survives the node export's sentinel filter. Returns the
+    joined edges and the column now holding the identifier."""
+    ids = sentinel_filter(nodes, id_prop).select(
+        F.col(key_col).alias("__key"), F.col(id_prop).alias(out)
+    )
+    return edges.join(ids, edges[fk] == ids["__key"]).drop("__key"), out
 
 
 @dataclass

@@ -150,7 +150,7 @@ _BCAST_STATE_ROWS = 1_000_000
 def state_broadcaster(n_rows: int):
     """Return a wrapper for node-sized superstep-state DataFrames:
     ``F.broadcast`` when the loop's state row count is at most
-    ``SPARK_GRAFT_BCAST_STATE_ROWS`` (default 1M), else identity.
+    ``_BCAST_STATE_ROWS`` (1M), else identity.
 
     Iterative graph algorithms re-join edge tables against node-sized
     state every superstep; the state side is exactly bounded by the
@@ -160,34 +160,31 @@ def state_broadcaster(n_rows: int):
     every superstep pays full exchanges on both sides). Above the
     threshold the returned identity keeps the existing shuffle-join plan
     — the 100 TB path is unchanged."""
-    import os
-
-    cap = _BCAST_STATE_ROWS
-    env = os.environ.get("SPARK_GRAFT_BCAST_STATE_ROWS")
-    if env:
-        try:
-            cap = int(env)
-        except ValueError:
-            pass
-    if n_rows <= cap:
+    if n_rows <= _BCAST_STATE_ROWS:
         return F.broadcast
     return lambda df: df
 
 
+# superstep_scope sizing: one shuffle partition per _ROWS_PER_PART state
+# rows, never fewer than _MIN_PARTS partitions.
+_ROWS_PER_PART = 250_000
+_MIN_PARTS = 8
+
+
 @contextmanager
-def superstep_scope(spark, n_rows: int, rows_per_partition: int = 250_000,
-                    min_parts: int = 8):
+def superstep_scope(spark, n_rows: int):
     """Size shuffle parallelism to the STATE of an iterative algorithm
     for the duration of its superstep loop (restored on exit).
 
     Iterative graph algorithms materialize node/frontier-sized state
-    every superstep (eager localCheckpoint). The materialization path
+    every superstep (localCheckpoint). The materialization path
     goes through the RDD conversion, which bypasses AQE's post-shuffle
     coalescing — so every superstep of a 15k-node graph was paying 32
     shuffle partitions of scheduler/exchange fixed cost per join
     (measured at sf0.1: PageRank 7.9s → 3.8s, k-core 10.3s → 3.0s when
-    sized to the state). The target is ``n_rows / rows_per_partition``
-    clamped to [min_parts, session setting] — a billion-edge graph on a
+    sized to the state). The target is one partition per
+    ``_ROWS_PER_PART`` rows, clamped to [``_MIN_PARTS``, session
+    setting] — a billion-edge graph on a
     cluster keeps the session's full parallelism; only overhead-bound
     small state shrinks. Rounded outputs are partitioning-independent
     (pinned by tests/test_partition_independence.py), so this is a pure
@@ -206,7 +203,7 @@ def superstep_scope(spark, n_rows: int, rows_per_partition: int = 250_000,
         ceiling = int(saved)
     except (TypeError, ValueError):
         ceiling = spark.sparkContext.defaultParallelism
-    target = max(min_parts, min(ceiling, n_rows // rows_per_partition + 1))
+    target = max(_MIN_PARTS, min(ceiling, n_rows // _ROWS_PER_PART + 1))
     spark.conf.set("spark.sql.shuffle.partitions", str(target))
     try:
         yield target

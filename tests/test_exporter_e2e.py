@@ -145,3 +145,39 @@ def test_sharded_mode_manifest(view, tmp_path):
     assert manifest["columns"][0] == "c_custkey"
     assert len(manifest["shards"]) >= 1
     assert all(s.startswith("Customer/") for s in manifest["shards"])
+
+
+def _csv_column(path, name):
+    with open(path, newline="") as f:
+        reader = csv.DictReader(f)
+        return [row[name] for row in reader]
+
+
+def test_detected_identifier_export_translates_endpoints(view, export_dir, tmp_path):
+    """With ``use_declared_identifiers=False`` the node CSVs carry the
+    detected identifiers while the FK columns still hold the declared
+    keys: each relationship endpoint must be the endpoint node's
+    identifier, and no relationship may be lost."""
+    declared_out, declared = export_dir
+    out = tmp_path / "detected"
+    result = GraphExporter(view, str(out), use_declared_identifiers=False).run()
+    nodes, rels = result.manifest.nodes, result.manifest.rels
+    assert any(
+        n.identifier != declared.manifest.nodes[label].identifier
+        for label, n in nodes.items()
+    )
+    assert set(rels) == set(declared.manifest.rels)
+    for key, rel in rels.items():
+        path = out / f"{key}.csv"
+        for label, col in (
+            (rel.source_label, rel.source_col_name),
+            (rel.target_label, rel.target_col_name),
+        ):
+            ids = set(_csv_column(out / f"{label}.csv", nodes[label].identifier))
+            values = _csv_column(path, col)
+            assert values and set(values) <= ids, (key, col)
+        n_rows = len(_csv_column(path, rel.source_col_name))
+        n_declared = len(
+            _csv_column(declared_out / f"{key}.csv", declared.manifest.rels[key].source_col_name)
+        )
+        assert n_rows == n_declared, key
