@@ -6,22 +6,18 @@ Scale design notes (100 TB):
 - exact dedup is a hash groupBy on a fingerprint — one shuffle, no
   driver materialization; at extreme scale group on (fingerprint) only
   and keep min(doc_id) via partial aggregation.
-- n-gram Jaccard / containment use an inverted shingle index self-join;
-  its raw cost is Σ df(shingle)² — fine for sparse shingles (n≥3),
-  quadratic for hot (boilerplate) shingles. Both operators therefore
-  run behind a document-frequency cap (``_df_capped_index``): shingles
-  with df > max_df are dropped with a LOGGED count, bounding total cost
-  at |shingles|·max_df². MinHash LSH is the complementary screen:
-  candidates come from banded signature equality (equi-join on
-  (band, signature) — a plain shuffle join), and only candidates pay
-  the verification cost.
-- the banded self-joins (MinHash bands, SimHash blocks) carry the same
-  discipline as the shingle index: a bucket-occupancy cap
-  (``_occupancy_capped_buckets``, default 8192, logged drops) bounds
-  the worst bucket's pair fan-out at max_bucket² — one giant exact-dup
-  cluster or a collapsed signature otherwise turns the equi-join into
-  an all-pairs join in LSH costume (the round-6 embedding trap, same
-  fix as ``similarity._occupancy_capped_blocks``).
+- every pair operator is one blocked self-join, ``_candidate_pairs``
+  (rows sharing a key, id_a < id_b): the inverted shingle index for
+  n-gram Jaccard / containment, (band, signature) for MinHash LSH,
+  (q, block) for SimHash. Only candidates pay the verification cost.
+- the self-join's cost is Σ occupancy(key)², so each runs behind
+  ``partitioning.drop_hot_keys``: shingles with df > ``max_df``
+  (default 50) and buckets with occupancy > ``max_bucket`` (default
+  8192) are dropped with a LOGGED count, bounding each key's pair
+  fan-out at cap². Without it one boilerplate shingle, giant exact-dup
+  cluster or collapsed signature turns the equi-join into an
+  all-pairs join. Drops are queryable at
+  ``dropped_bucket_counts[(applicationId, op)]``.
 - SimHash block geometry is corpus-sized (round 10): 128-bit signatures
   with ``derive_simhash_block_bits`` widening the block as the corpus
   grows so hot-block occupancy stays near a target instead of linear —
@@ -44,7 +40,7 @@ logger = logging.getLogger(__name__)
 from ..functions.numeric import round_half_up
 
 from ..functions.text import fingerprint_md5, tokens, word_shingles
-from ..partitioning import fan_out
+from ..partitioning import dropped_bucket_counts, drop_hot_keys, fan_out  # noqa: F401
 
 
 def exact_dedup(
@@ -87,43 +83,6 @@ def shingle_index(
     )
 
 
-def _df_capped_index(idx: DataFrame, max_df: int | None, op: str) -> DataFrame:
-    """Drop shingles whose document frequency exceeds ``max_df`` from an
-    inverted (id, shingle) index, LOGGING the drop count (the "no silent
-    caps" rule).
-
-    This is what makes the inverted-index pair joins survivable at
-    corpus scale (VERDICT r05 #2): their cost is Σ df(shingle)², so ONE
-    boilerplate shingle shared by 1% of a 100-TB corpus is catastrophic
-    — with the cap, per-shingle pair fan-out is bounded by max_df², i.e.
-    total cost ≤ |shingles|·max_df². Dropping an ultra-common shingle is
-    stopword-removal semantics: it vanishes from intersections AND set
-    sizes, so a boilerplate phrase shared by half the corpus stops
-    manufacturing "similarity" — which is also the right signal, not
-    just the fast one.
-
-    The hot-shingle table is materialized once (eager localCheckpoint —
-    it holds only the >max_df shingles, tiny by construction), counted
-    for the log line, and anti-joined out (AQE broadcasts it).
-    """
-    if max_df is None:
-        return idx
-    dfreq = idx.groupBy("shingle").agg(F.count(F.lit(1)).alias("__df"))
-    hot = (
-        dfreq.filter(F.col("__df") > max_df)
-        .select("shingle")
-        .localCheckpoint(eager=True)
-    )
-    n_hot = hot.count()
-    if n_hot:
-        logger.warning(
-            "%s: dropping %d shingles with document frequency > %d "
-            "(stopword-removal semantics; bounds pair fan-out at max_df^2)",
-            op, n_hot, max_df,
-        )
-    return idx.join(hot, "shingle", "left_anti")
-
-
 def ngram_jaccard_pairs(
     df: DataFrame,
     text_col: str = "text",
@@ -136,7 +95,7 @@ def ngram_jaccard_pairs(
 
     Exact over the df-capped index (no sketching): shingles with
     document frequency > ``max_df`` are dropped first — logged, never
-    silent (``_df_capped_index``) — then inverted-index self-join →
+    silent (``drop_hot_keys``) — then inverted-index self-join →
     intersection counts → sizes join → filter. Output
     (id_a, id_b, jaccard) with id_a < id_b. ``max_df=None`` restores
     the uncapped exact-oracle baseline.
@@ -151,19 +110,14 @@ def ngram_jaccard_pairs(
     # Spark's LRU as the backstop — MEMORY_AND_DISK (not MEMORY_ONLY)
     # so eviction under pressure spills a corpus-sized index to disk
     # instead of re-running the explode+distinct per consumer (guide §5).
-    # The dict-cache eviction machinery (register_session_cache) is for
-    # driver-side memos keyed by applicationId and does not apply to a
-    # per-call persisted DataFrame.
     raw = shingle_index(df, text_col, id_col, n).persist(
         StorageLevel.MEMORY_AND_DISK
     )
-    idx = _df_capped_index(raw, max_df, "ngram_jaccard_pairs")
+    idx = drop_hot_keys(raw, ["shingle"], max_df, "ngram_jaccard_pairs")
     sizes = idx.groupBy(id_col).agg(F.count(F.lit(1)).alias("n_sh"))
-    a = idx.alias("a")
-    b = idx.alias("b")
     inter = (
-        a.join(b, (F.col(f"a.shingle") == F.col(f"b.shingle")) & (F.col(f"a.{id_col}") < F.col(f"b.{id_col}")))
-        .groupBy(F.col(f"a.{id_col}").alias("id_a"), F.col(f"b.{id_col}").alias("id_b"))
+        _candidate_pairs(idx, ["shingle"], id_col)
+        .groupBy("id_a", "id_b")
         .agg(F.count(F.lit(1)).alias("inter"))
     )
     sa = sizes.select(F.col(id_col).alias("id_a"), F.col("n_sh").alias("n_a"))
@@ -274,216 +228,23 @@ def _signatures_from_doc_shingles(
     return _band_signatures(mins, id_col, num_hashes, band_size)
 
 
-def _occupancy_capped_buckets(
-    table: DataFrame, key_cols: tuple[str, ...], max_bucket: int | None, op: str
+def _candidate_pairs(
+    table: DataFrame, keys, id_col: str, carry: tuple = ()
 ) -> DataFrame:
-    """Drop LSH buckets whose occupancy exceeds ``max_bucket`` from a
-    banding table, LOGGING the drop count — the same "no silent caps"
-    rule as ``_df_capped_index`` and
-    ``similarity._occupancy_capped_blocks`` (the embedding twin of this
-    helper).
-
-    The candidate self-join's cost is Σ occ(bucket)² across buckets, so
-    one degenerate bucket — a boilerplate-dominated corpus collapsing a
-    MinHash band, or near-constant documents collapsing a SimHash block
-    — is catastrophic at scale; with the cap, per-bucket pair fan-out is
-    bounded by max_bucket². Dropping a hot bucket costs recall only in
-    that band/block (the other bands still catch its members), and an
-    over-occupied bucket pairs everything with everything — it carries
-    almost no discriminating signal.
-
-    Cost discipline: the screen is ONE eager job — the per-bucket
-    counts filtered to >max_bucket, localCheckpointed (tiny by
-    construction: only hot keys survive the filter). In the common case
-    the checkpoint is EMPTY and the table returns unchanged, so the
-    self-join plan carries no anti-join; only a genuinely hot corpus
-    pays the anti-join (AQE broadcasts the hot table into both self-join
-    sides). Callers should cache/checkpoint the banding table's
-    expensive ancestry so the screen's scan is cheap — that scan is the
-    linear pass that buys the quadratic bound.
-
-    The screen result is memoized per (applicationId, semantic plan
-    hash, keys, cap): a session running several dedup operators over
-    the SAME banding plan (the bench and any real pipeline do) pays the
-    screen job once, not once per operator. applicationId-keyed, like
-    the registry caches, so a new session can never inherit a stale
-    verdict from a dead one; semantic-hash-keyed so any change to the
-    input plan re-screens. (Like every file-source cache in the engine,
-    it assumes the underlying files are immutable for the session.)
-
-    Lifecycle (round 10, VERDICT r09 directive #5 / ADVICE): entries
-    for DEAD sessions are evicted at insert time — any key whose
-    applicationId differs from the current session's is dropped, so a
-    long-lived multi-session process can hold at most one session's
-    screen verdicts. What is cached is the COLLECTED hot-key tuples
-    (bounded by n_rows/max_bucket, tiny on any corpus the cap is sane
-    for), not a checkpointed DataFrame: a localCheckpoint's
-    non-reliable blocks die with an executor, so a later reuse of a
-    cached DataFrame could fail the query instead of re-screening —
-    the literal tuples rebuild the anti-join side from the driver on
-    every use (AQE broadcasts it). The collect itself is guarded: past
-    ``_MAX_HOT_KEYS`` hot keys (a pathologically small cap on a huge
-    corpus) the cached verdict is an overflow marker and the anti-join
-    runs distributed instead of via driver-held tuples, so no cap value
-    can turn the screen into a driver-OOM vector. The per-(session, op)
-    drop count is queryable via ``dropped_bucket_counts`` so pipelines
-    can assert on recall loss instead of scraping logs; it accumulates
-    once per distinct screen per op (idempotent across memoized re-runs
-    of the same consumer).
-    """
-    if max_bucket is None:
-        return table
-    keys = list(key_cols)
-    app_id = table.sparkSession.sparkContext.applicationId
-    cache_key = (
-        app_id,
-        table._jdf.queryExecution().analyzed().semanticHash(),
-        tuple(keys),
-        max_bucket,
+    """(id_a, id_b, {c}_a, {c}_b for c in ``carry``) for every pair of
+    rows of ``table`` that agree on all ``keys``, with id_a < id_b —
+    the blocked self-join behind every pair operator here and
+    ``similarity.embedding_lsh_pairs``. Its cost is Σ occupancy(key)²,
+    so callers screen ``table`` with ``drop_hot_keys`` first. A pair
+    sharing several keys appears once per key; callers dedupe or count
+    the repeats."""
+    on = [F.col(f"a.{k}") == F.col(f"b.{k}") for k in keys]
+    on.append(F.col(f"a.{id_col}") < F.col(f"b.{id_col}"))
+    return table.alias("a").join(table.alias("b"), on).select(
+        F.col(f"a.{id_col}").alias("id_a"),
+        F.col(f"b.{id_col}").alias("id_b"),
+        *[F.col(f"{side}.{c}").alias(f"{c}_{side}") for c in carry for side in "ab"],
     )
-    hot_agg = (
-        table.groupBy(*keys)
-        .agg(F.count(F.lit(1)).alias("__occ"))
-        .filter(F.col("__occ") > max_bucket)
-        .select(*keys)
-    )
-    if cache_key not in _HOT_BUCKET_CACHE:
-        _evict_dead_sessions(app_id)
-        # In the expected regime ≤ n_rows/max_bucket keys survive the
-        # filter — tiny. But a pathologically small cap on a huge corpus
-        # makes "hot keys" driver-scale (e.g. max_bucket=16 on 10B rows
-        # → up to 625M keys), so the collect is bounded: past
-        # _MAX_HOT_KEYS the screen records an overflow verdict and the
-        # anti-join stays DISTRIBUTED (the agg subplan joins in-cluster,
-        # recomputed per use, never pulled to the driver).
-        hot_rows = hot_agg.limit(_MAX_HOT_KEYS + 1).collect()
-        if len(hot_rows) > _MAX_HOT_KEYS:
-            n_hot = hot_agg.count()
-            logger.warning(
-                "%s: %d LSH buckets exceed occupancy %d — too many to "
-                "cache on the driver (> %d); dropping them via a "
-                "distributed anti-join instead. A cap this far below "
-                "the corpus's bucket occupancy usually means the "
-                "banding geometry is wrong for this corpus.",
-                op, n_hot, max_bucket, _MAX_HOT_KEYS,
-            )
-            _HOT_BUCKET_CACHE[cache_key] = ("__overflow__", n_hot)
-        else:
-            if hot_rows:
-                logger.warning(
-                    "%s: dropping %d LSH buckets with occupancy > %d "
-                    "(bounds the candidate self-join at max_bucket^2 per "
-                    "bucket; recall loss is confined to the dropped band "
-                    "— widen the signature if this fires on a healthy "
-                    "corpus)",
-                    op, len(hot_rows), max_bucket,
-                )
-            _HOT_BUCKET_CACHE[cache_key] = (
-                tuple(tuple(r) for r in hot_rows) if hot_rows else None
-            )
-    hot = _HOT_BUCKET_CACHE[cache_key]
-    # Attribute the drop count once per (screen, op): a consumer re-run
-    # hitting the memoized screen must not re-add (the metric would
-    # drift from the once-per-screen WARN log and break exact-count
-    # assertions), while a second OP sharing the same screen records its
-    # own recall loss.
-    rec_key = (cache_key, op)
-    if rec_key not in _DROP_RECORDED:
-        _DROP_RECORDED.add(rec_key)
-        if isinstance(hot, tuple) and hot and hot[0] == "__overflow__":
-            n_dropped = hot[1]
-        else:
-            n_dropped = len(hot) if hot else 0
-        dropped_bucket_counts[(app_id, op)] = (
-            dropped_bucket_counts.get((app_id, op), 0) + n_dropped
-        )
-    if hot is None:
-        return table
-    if isinstance(hot, tuple) and hot and hot[0] == "__overflow__":
-        return table.join(hot_agg, keys, "left_anti")
-    hot_df = table.sparkSession.createDataFrame(
-        list(hot), table.select(*keys).schema
-    )
-    return table.join(hot_df, keys, "left_anti")
-
-
-_HOT_BUCKET_CACHE: dict[tuple, tuple | None] = {}
-
-# Driver-side ceiling on cached hot-key tuples; past it the screen
-# verdict is ("__overflow__", exact_count) and the anti-join runs
-# distributed (see _occupancy_capped_buckets).
-_MAX_HOT_KEYS = 65536
-
-# Queryable drop metric (ADVICE r09): (applicationId, op) → cumulative
-# count of LSH buckets the occupancy screen dropped in this session.
-# Pipelines assert on this instead of scraping WARN logs; evicted with
-# the screen cache when a new session inserts. _DROP_RECORDED keeps the
-# accumulation once-per-(screen, op) — idempotent across memoized
-# re-runs of the same consumer.
-dropped_bucket_counts: dict[tuple[str, str], int] = {}
-_DROP_RECORDED: set[tuple] = set()
-
-# Session-scoped caches registered by sibling modules (ADVICE r12):
-# mappings keyed like _DROP_RECORDED (key[0][0] is the applicationId)
-# whose stale entries must be swept from the single shared lifecycle
-# point below even when only the dedup screens run in a session.
-# ``similarity`` registers _RECORDED_N_HOT here at import time via
-# register_session_cache().
-_REGISTERED_SESSION_CACHES: list[dict] = []
-
-
-def register_session_cache(cache: dict) -> None:
-    """Register a sibling module's session-scoped cache for the shared
-    ``_evict_dead_sessions`` sweep.
-
-    Idempotent across ``importlib.reload`` (ADVICE r13: an
-    unconditional ``append`` at import time left the previous dict
-    registered forever after a reload — a small leak and a stale
-    double-entry in the registry).
-
-    Key contract (ADVICE r13): keys must be shaped like
-    ``_DROP_RECORDED``'s — ``key[0][0]`` is the owning applicationId
-    *string*, i.e. each key is a tuple whose first element is itself a
-    tuple headed by the app-id.  A flat ``(app_id, op)`` key would make
-    ``key[0][0]`` the first *character* of the app-id and silently
-    mis-evict; the sweep validates the shape and fails loudly instead.
-    """
-    if not any(c is cache for c in _REGISTERED_SESSION_CACHES):
-        _REGISTERED_SESSION_CACHES.append(cache)
-
-
-def _checked_cache_key(k) -> tuple:
-    if not (
-        isinstance(k, tuple)
-        and k
-        and isinstance(k[0], tuple)
-        and k[0]
-        and isinstance(k[0][0], str)
-    ):
-        raise TypeError(
-            f"registered session cache has mis-shaped key {k!r}: the "
-            "sweep contract is key[0][0] == applicationId (a nested "
-            "tuple headed by the app-id string — see "
-            "register_session_cache)"
-        )
-    return k
-
-
-def _evict_dead_sessions(app_id: str) -> None:
-    """Prune screen-cache entries, drop metrics, and drop-record keys
-    whose applicationId is not the live session's (VERDICT r09
-    directive #5) — shared by this module and
-    ``similarity._occupancy_capped_blocks`` so the lifecycle rule lives
-    in one place."""
-    for stale in [k for k in _HOT_BUCKET_CACHE if k[0] != app_id]:
-        del _HOT_BUCKET_CACHE[stale]
-    for stale in [k for k in dropped_bucket_counts if k[0] != app_id]:
-        del dropped_bucket_counts[stale]
-    for stale in [k for k in _DROP_RECORDED if k[0][0] != app_id]:
-        _DROP_RECORDED.discard(stale)
-    for cache in _REGISTERED_SESSION_CACHES:
-        for stale in [k for k in cache if _checked_cache_key(k)[0][0] != app_id]:
-            del cache[stale]
 
 
 def minhash_lsh_pairs(
@@ -512,7 +273,7 @@ def minhash_lsh_pairs(
     just recomputes its narrow lineage.
 
     ``max_bucket`` is defense in depth for the band self-join
-    (``_occupancy_capped_buckets``): a giant exact-dup cluster — the
+    (``drop_hot_keys``): a giant exact-dup cluster — the
     normal shape of web boilerplate — puts its whole membership in ONE
     (band, signature) bucket in EVERY band, and m members mean m²/2
     candidate pairs from each. The default (8192, matching the
@@ -535,20 +296,10 @@ def minhash_lsh_pairs(
         # exactly once (the same economics as the round-7 embedding
         # LSH checkpoint; a lazy persist costs no job of its own).
         sig = sig.persist(StorageLevel.MEMORY_ONLY)
-        sig = _occupancy_capped_buckets(
-            sig, ("band", "signature"), max_bucket, "minhash_lsh_pairs"
+        sig = drop_hot_keys(
+            sig, ["band", "signature"], max_bucket, "minhash_lsh_pairs"
         )
-    a, b = sig.alias("a"), sig.alias("b")
-    cands = (
-        a.join(
-            b,
-            (F.col("a.band") == F.col("b.band"))
-            & (F.col("a.signature") == F.col("b.signature"))
-            & (F.col(f"a.{id_col}") < F.col(f"b.{id_col}")),
-        )
-        .select(F.col(f"a.{id_col}").alias("id_a"), F.col(f"b.{id_col}").alias("id_b"))
-        .distinct()
-    )
+    cands = _candidate_pairs(sig, ["band", "signature"], id_col).distinct()
     sa = ds.select(F.col(id_col).alias("id_a"), F.col("shingles").alias("sh_a"))
     sb = ds.select(F.col(id_col).alias("id_b"), F.col("shingles").alias("sh_b"))
     inter = F.size(F.array_intersect(F.col("sh_a"), F.col("sh_b")))
@@ -765,7 +516,7 @@ def simhash_pairs(
     policy as ``minhash_lsh_pairs``.
 
     ``max_bucket`` caps degenerate (q, block) buckets exactly as the
-    MinHash band join does (``_occupancy_capped_buckets``): a
+    MinHash band join does (``drop_hot_keys``): a
     near-constant corpus collapses SimHash blocks, and one collapsed
     block puts the whole corpus in one bucket. Dropping a hot bucket
     weakens the pigeonhole guarantee only for pairs whose sole agreeing
@@ -790,32 +541,19 @@ def simhash_pairs(
             "target_occupancy=%d)",
             block_bits, n_docs, bits, target_occupancy,
         )
-    blocks = _occupancy_capped_buckets(
+    blocks = drop_hot_keys(
         _simhash_blocks(sig, id_col, bits, block_bits),
-        ("q", "block"),
+        ["q", "block"],
         max_bucket,
         "simhash_pairs",
     )
-    a, b = blocks.alias("a"), blocks.alias("b")
-    cands = (
-        a.join(
-            b,
-            (F.col("a.q") == F.col("b.q"))
-            & (F.col("a.block") == F.col("b.block"))
-            & (F.col(f"a.{id_col}") < F.col(f"b.{id_col}")),
-        )
-        .select(
-            F.col(f"a.{id_col}").alias("id_a"),
-            F.col(f"b.{id_col}").alias("id_b"),
-            F.col("a.simhash").alias("sig_a"),
-            F.col("b.simhash").alias("sig_b"),
-        )
-        .distinct()
-    )
+    cands = _candidate_pairs(
+        blocks, ["q", "block"], id_col, carry=("simhash",)
+    ).distinct()
     # Hamming distance between bitstrings: count differing positions.
     ham = F.expr(
         f"size(filter(sequence(1, {bits}), "
-        "i -> substring(sig_a, i, 1) != substring(sig_b, i, 1)))"
+        "i -> substring(simhash_a, i, 1) != substring(simhash_b, i, 1)))"
     )
     return cands.select(
         "id_a", "id_b", ham.alias("hamming")
@@ -1388,17 +1126,7 @@ def minhash_calibration(
         .persist(StorageLevel.MEMORY_AND_DISK)
     )
     sig = _band_signatures(mins, id_col, num_hashes, band_size)
-    a, b = sig.alias("a"), sig.alias("b")
-    cands = (
-        a.join(
-            b,
-            (F.col("a.band") == F.col("b.band"))
-            & (F.col("a.signature") == F.col("b.signature"))
-            & (F.col(f"a.{id_col}") < F.col(f"b.{id_col}")),
-        )
-        .select(F.col(f"a.{id_col}").alias("id_a"), F.col(f"b.{id_col}").alias("id_b"))
-        .distinct()
-    )
+    cands = _candidate_pairs(sig, ["band", "signature"], id_col).distinct()
     ma = mins.select(
         F.col(id_col).alias("id_a"),
         F.col("shingles").alias("sh_a"),
@@ -1495,7 +1223,7 @@ def containment_pairs(
     Same inverted-shingle-index self-join shape as
     ``ngram_jaccard_pairs``, and the same df cap: shingles with
     document frequency > ``max_df`` are dropped first (logged, never
-    silent — ``_df_capped_index``), bounding the otherwise
+    silent — ``drop_hot_keys``), bounding the otherwise
     Σ df(shingle)² join at |shingles|·max_df². Output
     (id_a, id_b, containment, jaccard) with id_a < id_b so the two
     measures are directly comparable per pair; ``max_df=None``
@@ -1506,19 +1234,11 @@ def containment_pairs(
     raw = shingle_index(df, text_col, id_col, n).persist(
         StorageLevel.MEMORY_AND_DISK
     )
-    idx = _df_capped_index(raw, max_df, "containment_pairs")
+    idx = drop_hot_keys(raw, ["shingle"], max_df, "containment_pairs")
     sizes = idx.groupBy(id_col).agg(F.count(F.lit(1)).alias("n_sh"))
-    a = idx.alias("a")
-    b = idx.alias("b")
     inter = (
-        a.join(
-            b,
-            (F.col("a.shingle") == F.col("b.shingle"))
-            & (F.col(f"a.{id_col}") < F.col(f"b.{id_col}")),
-        )
-        .groupBy(
-            F.col(f"a.{id_col}").alias("id_a"), F.col(f"b.{id_col}").alias("id_b")
-        )
+        _candidate_pairs(idx, ["shingle"], id_col)
+        .groupBy("id_a", "id_b")
         .agg(F.count(F.lit(1)).alias("inter"))
     )
     sa = sizes.select(F.col(id_col).alias("id_a"), F.col("n_sh").alias("n_a"))
@@ -1628,7 +1348,7 @@ def boilerplate_grams(
     ~(1/min_ratio) * avg_grams_per_doc rows regardless of corpus
     size, so the window never sees an unbounded input. No all-pairs
     joins anywhere; this is the aggregate-side complement of
-    ``_df_capped_index``'s drop rule (what that cap discards, this
+    the df cap's drop rule (what ``drop_hot_keys`` discards, this
     operator reports).
 
     Returns (source, gram_h, df_docs, n_docs, df_ratio, rank) with

@@ -44,7 +44,7 @@ from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
 from ..functions.numeric import dsum, round_half_up
-from ..partitioning import state_broadcaster, superstep_scope
+from ..partitioning import drop_hot_keys, state_broadcaster, superstep_scope
 
 
 def _undirected(
@@ -1205,37 +1205,23 @@ def bridge_edges(
     zero-common edges survive. The wedge cost is Σ deg(center)², which
     no orientation trick can bound here (embeddedness needs ALL common
     neighbors, not one triangle witness), so centers with degree >
-    ``max_center_degree`` are EXCLUDED — the same logged-cap rule as
-    the shingle df cap (``dedup._df_capped_index``): a hub adjacent to
+    ``max_center_degree`` are EXCLUDED — the same logged cap as the
+    shingle df cap (``partitioning.drop_hot_keys``): a hub adjacent to
     half the graph is "common" to almost every edge and carries no
     embeddedness signal, while its deg² wedge set is catastrophic.
     n_common therefore counts common neighbors of degree ≤ cap, and
     ``is_bridge`` means "no low-degree common neighbor". The dropped
     center count is logged.
     """
-    import logging
-
-    logger = logging.getLogger(__name__)
     und = _undirected(edges, src, dst, drop_loops=True)
     canon = und.filter(F.col("a") < F.col("b"))
-    deg = und.groupBy(F.col("a").alias("c")).agg(
-        F.count(F.lit(1)).alias("__deg")
-    )
-    hot = (
-        deg.filter(F.col("__deg") > max_center_degree)
-        .select("c")
-        .localCheckpoint(eager=True)
-    )
-    n_hot = hot.count()
-    if n_hot:
-        logger.warning(
-            "bridge_edges: excluding %d wedge centers with degree > %d "
-            "(embeddedness counts low-degree common neighbors only)",
-            n_hot, max_center_degree,
-        )
-    # adjacency restricted to low-degree centers; wedge (ea, c, eb)
-    adj = und.select(F.col("b").alias("c"), F.col("a").alias("n")).join(
-        hot, "c", "left_anti"
+    # adjacency restricted to low-degree centers (a center's occupancy
+    # is its degree); wedge (ea, c, eb)
+    adj = drop_hot_keys(
+        und.select(F.col("b").alias("c"), F.col("a").alias("n")),
+        ["c"],
+        max_center_degree,
+        "bridge_edges",
     )
     na = adj.select("c", F.col("n").alias("ea"))
     nb = adj.select("c", F.col("n").alias("eb"))
@@ -1438,7 +1424,7 @@ def adamic_adar_topk(
     degree-ordered orientation cannot bound the wedge fan-out — a hub
     center genuinely contributes deg² candidate pairs. The honest
     scale device is therefore an explicit LOGGED center-degree cap
-    (the ``_df_capped_index`` analog): centers with deg >
+    (``partitioning.drop_hot_keys``, as for shingles): centers with deg >
     ``max_center_degree`` are excluded from wedge enumeration with a
     warning carrying the count, bounding total wedges at
     |V|·cap²/2 — and a node connected to >cap others is exactly the
@@ -1449,26 +1435,18 @@ def adamic_adar_topk(
 
     Returns (u, v, n_common, aa_score) with u < v, rank-stable.
     """
-    import logging
-
-    logger = logging.getLogger(__name__)
     # Referenced six times downstream (deg, both wedge sides, the
     # non-adjacency anti-join, twice via sym's self-union) — without
     # this the edge distinct's shuffle re-executes per branch.
     und = _canonical(edges, src, dst).localCheckpoint(eager=False)
     sym, deg = _sym(und)
-    hot = deg.where(F.col("deg") > max_center_degree).localCheckpoint(
-        eager=True
-    )
-    n_hot = hot.count()
-    if n_hot:
-        logger.warning(
-            "adamic_adar_topk: excluding %d hub centers with degree > %d "
-            "from wedge enumeration (bounds wedges at |V|*cap^2/2)",
-            n_hot,
-            max_center_degree,
-        )
-    # r14: the hot-screen's count() above materialized und's lazy
+    # Neighbor lists of centers with deg <= cap only (a center's
+    # occupancy in sym is its degree), so hubs drop out of both wedge
+    # sides and of the centers join.
+    nbrs = drop_hot_keys(
+        sym, ["u"], max_center_degree, "adamic_adar_topk"
+    ).select(F.col("u").alias("c"), F.col("v").alias("x"))
+    # r14: the hot-key screen above materialized und's lazy
     # checkpoint, so counting it now is a cheap local scan; the edge
     # count gates broadcasting the node-sized center weights and the
     # non-adjacency anti-join side. The wedge self-join side is
@@ -1477,17 +1455,12 @@ def adamic_adar_topk(
     # input partitions (measured 9 s → 80 s at sf0.1) — the exchange IS
     # what spreads the wedge work (OPTIMIZATION_r14.md).
     bc = state_broadcaster(2 * und.count())
-    centers = (
-        deg.join(hot.select("u"), "u", "left_anti")
-        .where(F.col("deg") >= 2)
-        .select(
-            F.col("u").alias("c"),
-            round_half_up(1.0 / F.log(F.col("deg")), 9)
-            .cast("decimal(20,9)")
-            .alias("w_c"),
-        )
+    centers = deg.where(F.col("deg") >= 2).select(
+        F.col("u").alias("c"),
+        round_half_up(1.0 / F.log(F.col("deg")), 9)
+        .cast("decimal(20,9)")
+        .alias("w_c"),
     )
-    nbrs = sym.select(F.col("u").alias("c"), F.col("v").alias("x"))
     wedges = (
         nbrs.join(bc(centers), "c")
         .join(

@@ -20,6 +20,7 @@ from pyspark.sql import functions as F
 
 from ..functions.numeric import round_half_up
 from ..functions.text import tokens
+from ..partitioning import drop_hot_keys
 
 
 def _term_stream(df: DataFrame, text_col: str, id_col: str) -> DataFrame:
@@ -344,30 +345,16 @@ def tfidf_cosine_pairs(
     together, keeping the cosine a true cosine over the kept
     vocabulary). Output (id_a, id_b, tfidf_cosine) with id_a < id_b.
     """
-    import logging
-
-    logger = logging.getLogger(__name__)
     tf = _term_stream(df, text_col, id_col).groupBy(id_col, "term").agg(
         F.count(F.lit(1)).alias("tf")
     )
     doc_freq = tf.groupBy("term").agg(F.count(F.lit(1)).alias("doc_freq"))
-    hot = (
-        doc_freq.filter(F.col("doc_freq") > max_df)
-        .select("term")
-        .localCheckpoint(eager=True)
-    )
-    n_hot = hot.count()
-    if n_hot:
-        logger.warning(
-            "tfidf_cosine_pairs: dropping %d terms with df > %d",
-            n_hot, max_df,
-        )
     n_docs = df.select(F.count(F.lit(1)).alias("n_docs"))
     # weights rounded to 9 dp, sums decimal-exact: both the dot products
     # and the norms are then identical under any partitioning and in the
     # SQL oracle (the dsum discipline — float sums are order-dependent)
     w = (
-        tf.join(hot, "term", "left_anti")
+        drop_hot_keys(tf, ["term"], max_df, "tfidf_cosine_pairs")
         .join(doc_freq, "term")
         .crossJoin(F.broadcast(n_docs))
         .select(

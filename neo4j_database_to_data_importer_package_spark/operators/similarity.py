@@ -7,31 +7,22 @@ nprobe nearest cells → candidate set shrinks by ~n_cells/nprobe).
 Dot products run as ``aggregate(zip_with(...))`` over array<double> —
 JVM-side, no UDF, deterministic left-to-right accumulation (matches
 DuckDB's list_dot_product for oracle parity).
+
+The embedding LSH join is the same blocked self-join as the text dedup
+operators (``dedup._candidate_pairs``) behind the same logged hot-key
+cap (``partitioning.drop_hot_keys``); its drops count in
+``dedup.dropped_bucket_counts``.
 """
 
 from __future__ import annotations
 
-import logging
-
+from pyspark import StorageLevel
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
 from ..functions.numeric import round_half_up
-from ..partitioning import fan_out
-
-logger = logging.getLogger(__name__)
-
-# ADVICE r11: per-screen recorded hot-bucket counts, so a re-execution
-# whose recomputed n_hot differs from what dropped_bucket_counts absorbed
-# (possible only if session files mutate under a path-keyed plan hash)
-# is logged instead of silently diverging. Keyed like dedup._DROP_RECORDED
-# (rec_key[0][0] is the applicationId) and registered with dedup's
-# shared eviction point (ADVICE r12) so a dedup-only session sweeps it
-# too — no stale growth across long-lived multi-session processes.
-_RECORDED_N_HOT: dict[tuple, int] = {}
-from .dedup import register_session_cache as _register_session_cache  # noqa: E402
-
-_register_session_cache(_RECORDED_N_HOT)
+from ..partitioning import drop_hot_keys, fan_out
+from .dedup import _candidate_pairs
 
 
 def _as_double(col) -> F.Column:
@@ -222,8 +213,12 @@ def _signature_blocks(
     One transform over a literal plane matrix, not n_bits separate dot
     expressions: identical semantics, but the plan carries a single
     aggregate/zip_with node (fast analysis + codegen at 128 planes).
-    The (id, sig) table is localCheckpointed (~150 B/row) so the dot
-    products run once, not once per self-join branch."""
+    The (id, sig) table is persisted (~150 B/row) so the dot products
+    run once, not once per self-join branch; a persist keeps the plan
+    hash stable, so ``drop_hot_keys`` memoizes the screen across
+    rebuilds of the same banding (a localCheckpoint would give every
+    rebuild a fresh hash). Cleanup is caller-scoped, as for the dedup
+    persists."""
     planes = _hyperplanes(n_bits, dim)
     planes_arr = _literal_matrix_expr(planes)
     sig_expr = F.array_join(
@@ -235,8 +230,8 @@ def _signature_blocks(
         ),
         "",
     )
-    sig = n.select(F.col(id_col), sig_expr.alias("sig")).localCheckpoint(
-        eager=False
+    sig = n.select(F.col(id_col), sig_expr.alias("sig")).persist(
+        StorageLevel.MEMORY_AND_DISK
     )
     n_blocks = n_bits // block_size
     return sig.select(
@@ -251,100 +246,6 @@ def _signature_blocks(
             ])
         ).alias("bq"),
     ).select(id_col, F.col("bq.q").alias("q"), F.col("bq.block").alias("block"))
-
-
-def _occupancy_capped_blocks(
-    blocks: DataFrame,
-    max_bucket: int | None,
-    op: str,
-    plan_key: tuple,
-) -> DataFrame:
-    """Drop LSH buckets whose occupancy exceeds ``max_bucket`` from a
-    (id, q, block) banding table, LOGGING the drop count — the same
-    "no silent caps" rule as ``dedup._df_capped_index``.
-
-    The candidate self-join's cost is Σ occ(bucket)² across buckets, so
-    one degenerate bucket (signature collapse on near-constant vectors,
-    or a block width too narrow for the corpus) is catastrophic at
-    scale; with the cap, per-bucket pair fan-out is bounded by
-    max_bucket². Dropping a hot bucket costs recall only in that band —
-    the other ``n_bits/block_size − 1`` bands still catch its members —
-    and an over-occupied bucket carries almost no discriminating signal
-    anyway (it pairs everything with everything).
-
-    The hot-bucket table is materialized once (eager localCheckpoint —
-    it holds only the >max_bucket (q, block) keys, tiny by
-    construction), counted for the log line, and anti-joined out (AQE
-    broadcasts it). Used immediately and never cached across calls, so
-    the checkpoint-block lifetime concern that moved the dedup twin to
-    collected tuples (ADVICE r09) does not apply here. The drop count
-    feeds the shared queryable metric
-    ``dedup.dropped_bucket_counts[(applicationId, op)]`` (ADVICE r09:
-    pipelines assert on recall loss instead of scraping logs),
-    accumulating once per distinct (banding plan, op) — idempotent
-    across re-runs of the same consumer, the same exact-count semantics
-    as the dedup twin (ADVICE r10).
-    """
-    if max_bucket is None:
-        return blocks
-    occ = blocks.groupBy("q", "block").agg(F.count(F.lit(1)).alias("__occ"))
-    hot = (
-        occ.filter(F.col("__occ") > max_bucket)
-        .select("q", "block")
-        .localCheckpoint(eager=True)
-    )
-    n_hot = hot.count()
-    from .dedup import _DROP_RECORDED, _evict_dead_sessions, dropped_bucket_counts
-
-    app_id = blocks.sparkSession.sparkContext.applicationId
-    # _evict_dead_sessions sweeps _RECORDED_N_HOT too — it is registered
-    # with dedup's shared lifecycle point at module import (ADVICE r12).
-    _evict_dead_sessions(app_id)
-    # Accumulate once per (screen, op), exactly like the dedup twin
-    # (ADVICE r10: the shared metric must have ONE semantics) — keyed on
-    # the banding plan's identity so re-executing the same similarity
-    # consumer is idempotent while a genuinely different input plan
-    # records its own drops. ``plan_key`` is REQUIRED and must come from
-    # the PRE-checkpoint plan: the banding table always descends from
-    # _signature_blocks' localCheckpoint, whose fresh RDD id would give
-    # the same consumer a new semanticHash on every rebuild — a
-    # "fallback" to the blocks plan's own hash is inert by construction
-    # (round-11 review). Like every file-source cache in the engine,
-    # once-per-plan recording assumes the underlying files are immutable
-    # for the session — the same assumption under which the recomputed
-    # drop and the recorded count can never diverge. Key shape mirrors
-    # dedup's ((app_id, hash, keys, cap), op) so _evict_dead_sessions
-    # covers it. The WARN lives inside the same once-per-screen branch
-    # as the metric (ADVICE r11: log count and metric must agree, like
-    # the dedup twin's cache-miss WARN); re-executions that recompute a
-    # DIFFERENT n_hot instead log the assumption violation below.
-    rec_key = ((app_id, plan_key, ("q", "block"), max_bucket), op)
-    if rec_key not in _DROP_RECORDED:
-        _DROP_RECORDED.add(rec_key)
-        _RECORDED_N_HOT[rec_key] = n_hot
-        if n_hot:
-            logger.warning(
-                "%s: dropping %d LSH buckets with occupancy > %d (bounds "
-                "the candidate self-join at max_bucket^2 per bucket; "
-                "recall loss is confined to the dropped band — widen "
-                "block_size if this fires on a healthy corpus)",
-                op, n_hot, max_bucket,
-            )
-        dropped_bucket_counts[(app_id, op)] = (
-            dropped_bucket_counts.get((app_id, op), 0) + n_hot
-        )
-    elif _RECORDED_N_HOT.get(rec_key, n_hot) != n_hot:
-        # ADVICE r11: semanticHash of a file-source plan keys on path,
-        # not contents — surface (don't silently absorb) a mid-session
-        # file mutation that makes the recorded drop count stale.
-        logger.warning(
-            "%s: recomputed hot-bucket count %d differs from the %d "
-            "recorded for this plan — the session's immutable-files "
-            "assumption was violated; dropped_bucket_counts is stale "
-            "for this (plan, op)",
-            op, n_hot, _RECORDED_N_HOT[rec_key],
-        )
-    return blocks.join(hot, ["q", "block"], "left_anti")
 
 
 def embedding_lsh_pairs(
@@ -373,9 +274,8 @@ def embedding_lsh_pairs(
     all-pairs join in LSH costume at 10⁹ vectors. The defaults are now
     128 bits in 16-bit blocks: 65 536 buckets per band (4 096× more),
     8 bands. As defense in depth, ``max_bucket`` caps any still-hot
-    bucket with a logged drop (``_occupancy_capped_blocks`` — same
-    discipline as the shingle joins' ``_df_capped_index``); set it None
-    to disable.
+    bucket with a logged drop (``drop_hot_keys`` — the same cap as the
+    shingle joins' ``max_df``); set it None to disable.
 
     Recall regime: P(bit agree) = 1 − θ/π, so a 16-bit block matches
     with p^16 and 8 bands give 1−(1−p^16)^8 ≈ 0.93 at cos ≥ 0.99 and
@@ -390,45 +290,18 @@ def embedding_lsh_pairs(
     vector: at 10⁹ rows the exploded table is ``n_bits/block_size`` ×
     corpus size, and dragging a 64-double payload through that shuffle
     is ~10× the bytes for nothing. Vectors re-join only the verified
-    candidates (few by design). The (id, sig) table is localCheckpointed
+    candidates (few by design). The (id, sig) table is persisted
     (~150 B/row) so the b fixed-literal dot products run exactly once,
     not once per self-join branch; the dots themselves are codegen
     ``zip_with``/``aggregate`` expressions.
     """
     n = with_norm(df, vec_col, id_col)
     blocks = _signature_blocks(n, id_col, dim, n_bits, block_size)
-    if max_bucket is not None:
-        blocks = _occupancy_capped_blocks(
-            blocks,
-            max_bucket,
-            "embedding_lsh_pairs",
-            # Pre-checkpoint identity: _signature_blocks localCheckpoints
-            # the (id, sig) table, so the blocks plan's own semanticHash
-            # changes on every rebuild of the SAME consumer — key the
-            # drop metric on the normed input plan + banding geometry
-            # instead. Computed only when the screen is enabled: the
-            # semanticHash call forces driver-side analysis of the
-            # normed plan, wasted work under max_bucket=None.
-            plan_key=(
-                n._jdf.queryExecution().analyzed().semanticHash(),
-                dim,
-                n_bits,
-                block_size,
-            ),
-        )
-    a, b = blocks.alias("a"), blocks.alias("b")
-    cands = (
-        a.join(
-            b,
-            (F.col("a.q") == F.col("b.q"))
-            & (F.col("a.block") == F.col("b.block"))
-            & (F.col(f"a.{id_col}") < F.col(f"b.{id_col}")),
-        )
-        .select(
-            F.col(f"a.{id_col}").alias("id_a"),
-            F.col(f"b.{id_col}").alias("id_b"),
-        )
-        .dropDuplicates(["id_a", "id_b"])
+    blocks = drop_hot_keys(
+        blocks, ["q", "block"], max_bucket, "embedding_lsh_pairs"
+    )
+    cands = _candidate_pairs(blocks, ["q", "block"], id_col).dropDuplicates(
+        ["id_a", "id_b"]
     )
     x, y = n.alias("x"), n.alias("y")
     pairs = (

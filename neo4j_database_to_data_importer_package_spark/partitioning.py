@@ -7,12 +7,20 @@ expansion, 16-way md5) would otherwise run in a single task while 31
 cores idle. ``fan_out`` widens only when the current plan is narrower
 than the session's parallelism — the 100 TB path never pays the extra
 shuffle.
+
+The skew helpers sit beside it: ``drop_hot_keys`` (the one logged
+hot-key cap in front of every quadratic self-join), ``salted_join``,
+``state_broadcaster`` and ``superstep_scope``.
 """
 
 from __future__ import annotations
 
+import logging
+
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
+
+logger = logging.getLogger(__name__)
 
 
 def fan_out(
@@ -130,6 +138,97 @@ def salted_join(
     )
     out = s.join(d, [on, "__salt"], how)
     return out.drop("__salt")
+
+
+# Driver-side ceiling on the hot-key tuples ``drop_hot_keys`` collects;
+# past it the verdict is an overflow and the anti-join runs distributed.
+_MAX_HOT_KEYS = 65536
+
+# (applicationId, semantic plan hash, keys, limit, op) → the collected
+# hot-key tuples, or None when they overflowed ``_MAX_HOT_KEYS``.
+_HOT_KEYS: dict[tuple, tuple | None] = {}
+
+# (applicationId, op) → keys dropped by ``drop_hot_keys`` in that
+# session; re-exported as ``operators.dedup.dropped_bucket_counts``
+# (contract in docs/DEPLOY_100TB.md).
+dropped_bucket_counts: dict[tuple[str, str], int] = {}
+
+
+def drop_hot_keys(table: DataFrame, keys, limit: int | None, op: str) -> DataFrame:
+    """Drop every row of ``table`` whose ``keys`` value occurs in more
+    than ``limit`` rows, logging the drop (the "no silent caps" rule).
+
+    This is the screen in front of every self-join on ``keys``: the
+    join's cost is Σ occupancy², so one hot key (a boilerplate shingle,
+    a collapsed LSH bucket, a hub node) makes it quadratic in the
+    corpus; with the screen a key contributes at most ``limit``² pairs.
+    A key that common carries almost no signal for the join anyway.
+    ``limit=None`` returns ``table`` unchanged.
+
+    The verdict is memoized per (applicationId, semantic plan hash,
+    keys, limit, op): a memo miss runs one screen job, logs one WARN and
+    adds the number of dropped keys to ``dropped_bucket_counts[(appId,
+    op)]``; a hit runs nothing, so reruns of the same (plan, op) neither
+    re-log nor re-count. Inserting a new entry evicts every memo and
+    metric entry of a dead session. The memo holds the collected key
+    tuples, not a DataFrame, so no cached verdict depends on executor
+    blocks; past ``_MAX_HOT_KEYS`` keys the verdict is an overflow and
+    the anti-join runs distributed instead. When no key is hot the
+    table is returned unchanged, so the plan carries no anti-join.
+    Like every file-source cache in the engine, the memo assumes the
+    input files do not change within a session. A table descending
+    from a ``localCheckpoint`` has a fresh plan hash per build and is
+    screened on every call.
+    """
+    if limit is None:
+        return table
+    keys = list(keys)
+    app_id = table.sparkSession.sparkContext.applicationId
+    memo_key = (
+        app_id,
+        table._jdf.queryExecution().analyzed().semanticHash(),
+        tuple(keys),
+        limit,
+        op,
+    )
+    hot = (
+        table.groupBy(*keys)
+        .agg(F.count(F.lit(1)).alias("__occ"))
+        .filter(F.col("__occ") > limit)
+        .select(*keys)
+    )
+    if memo_key not in _HOT_KEYS:
+        for memo in (_HOT_KEYS, dropped_bucket_counts):
+            for stale in [k for k in memo if k[0] != app_id]:
+                del memo[stale]
+        rows = hot.limit(_MAX_HOT_KEYS + 1).collect()
+        overflow = len(rows) > _MAX_HOT_KEYS
+        n_hot = hot.count() if overflow else len(rows)
+        _HOT_KEYS[memo_key] = None if overflow else tuple(tuple(r) for r in rows)
+        dropped_bucket_counts[(app_id, op)] = (
+            dropped_bucket_counts.get((app_id, op), 0) + n_hot
+        )
+        if n_hot:
+            logger.warning(
+                "%s: dropping %d keys of (%s) with occupancy > %d (bounds "
+                "the self-join at %d^2 pairs per key)%s",
+                op, n_hot, ", ".join(keys), limit, limit,
+                "; too many to hold on the driver, so the anti-join runs "
+                "distributed" if overflow else "",
+            )
+    verdict = _HOT_KEYS[memo_key]
+    if verdict == ():
+        return table
+    if verdict is not None:
+        # At most _MAX_HOT_KEYS rows, so always broadcastable; the hint
+        # also lets the optimizer push the anti-join below the table's
+        # aggregate (a driver-built table carries no size estimate).
+        hot = F.broadcast(
+            table.sparkSession.createDataFrame(
+                list(verdict), table.select(*keys).schema
+            )
+        )
+    return table.join(hot, keys, "left_anti")
 
 
 from contextlib import contextmanager

@@ -11,7 +11,7 @@ Spark-first differences (BASELINE.md engine targets):
   concurrently from driver threads; executors stay saturated instead of
   the reference's serial label loop (``:277``).
 - nothing materializes on the driver except the manifest (column lists,
-  identifiers, 1-row samples).
+  identifiers, 1-row samples read back from the written CSVs).
 - ``single_file=True`` reproduces the reference's exact ``{Label}.csv``
   naming via coalesce(1)+rename; ``False`` is the 100 TB mode (sharded
   CSV + manifest per table).
@@ -35,6 +35,9 @@ from .manifest import ExportManifest, NodeEntry, RelEntry
 from .models import GENERATORS
 
 MODEL_FILENAME = "neo4j_importer_model.json"
+
+# Concurrent per-label / per-pattern write jobs submitted from driver threads.
+MAX_PARALLEL_WRITES = 8
 
 
 @dataclass
@@ -60,7 +63,6 @@ class GraphExporter:
         compat_render: bool = False,
         quirks: bool = True,
         use_declared_identifiers: bool = True,
-        max_parallel_writes: int = 8,
         uuid_factory=None,
         clock=None,
     ) -> None:
@@ -71,7 +73,6 @@ class GraphExporter:
         self.compat_render = compat_render
         self.quirks = quirks
         self.use_declared_identifiers = use_declared_identifiers
-        self.max_parallel_writes = max_parallel_writes
         self.uuid_factory = uuid_factory
         self.clock = clock
         os.makedirs(output_dir, exist_ok=True)
@@ -84,45 +85,50 @@ class GraphExporter:
         detected = detect_identifiers(missing, self.view.catalog.unique_constraints)
         return {**declared, **detected}
 
+    def _write_all(self, results: dict, entry) -> dict:
+        """Write every table of ``results`` concurrently and return
+        ``{name: entry(name, result, sample)}`` in sorted name order
+        (pinned enumeration order, SURVEY §7.3 #3).
+
+        The sample is the first data row read back from the written CSV
+        (the reference re-opens each file, ``neo4j_export.py:520-528``).
+        In sharded mode that is the first row of the first non-empty
+        shard in part order, the row the coalesced single file starts
+        with, so both modes render the same samples."""
+
+        def write(name):
+            r = results[name]
+            if self.single_file:
+                path = os.path.join(self.output_dir, f"{name}.csv")
+                write_csv_single_file(r.df, path, compat_render=self.compat_render)
+                paths = [path]
+            else:
+                shards = write_csv_sharded(r.df, self.output_dir, name)["shards"]
+                paths = [os.path.join(self.output_dir, p) for p in shards]
+            row = next(filter(None, map(read_first_data_row, paths)), None)
+            sample = dict(zip(r.columns, row)) if row else {}
+            return name, entry(name, r, sample)
+
+        ordered = sorted(results)
+        with ThreadPoolExecutor(max_workers=MAX_PARALLEL_WRITES) as ex:
+            entries = dict(ex.map(write, ordered))
+        return {name: entries[name] for name in ordered}
+
     def export_nodes(self, identifiers: dict[str, str]) -> dict[str, NodeEntry]:
         results = export_nodes(
             self.view.nodes, self.view.catalog.unique_constraints, identifiers
         )
-
-        def write(label):
-            r = results[label]
-            if self.single_file:
-                path = os.path.join(self.output_dir, f"{label}.csv")
-                write_csv_single_file(r.df, path, compat_render=self.compat_render)
-                sample_row = read_first_data_row(path)
-            else:
-                write_csv_sharded(r.df, self.output_dir, label)
-                head = r.df.take(1)
-                sample_row = [str(v) for v in head[0]] if head else None
-            sample = dict(zip(r.columns, sample_row)) if sample_row else {}
-            return label, NodeEntry(label, r.columns, r.identifier, sample)
-
-        ordered = sorted(results)  # pinned enumeration order (SURVEY §7.3 #3)
-        with ThreadPoolExecutor(max_workers=self.max_parallel_writes) as ex:
-            entries = dict(ex.map(write, ordered))
-        return {label: entries[label] for label in ordered}
+        return self._write_all(
+            results,
+            lambda label, r, sample: NodeEntry(label, r.columns, r.identifier, sample),
+        )
 
     def export_relationships(self, identifiers: dict[str, str]) -> dict[str, RelEntry]:
         results = export_relationships(self.view, identifiers)
 
-        def write(key):
-            r = results[key]
-            if self.single_file:
-                path = os.path.join(self.output_dir, f"{key}.csv")
-                write_csv_single_file(r.df, path, compat_render=self.compat_render)
-                sample_row = read_first_data_row(path)
-            else:
-                write_csv_sharded(r.df, self.output_dir, key)
-                head = r.df.take(1)
-                sample_row = [str(v) for v in head[0]] if head else None
-            sample = dict(zip(r.columns, sample_row)) if sample_row else {}
+        def entry(key, r, sample):
             spec = r.spec
-            return key, RelEntry(
+            return RelEntry(
                 pattern_key=key,
                 rel_type=spec.rel_type,
                 source_label=spec.src_label,
@@ -136,10 +142,7 @@ class GraphExporter:
                 sample=sample,
             )
 
-        ordered = sorted(results)
-        with ThreadPoolExecutor(max_workers=self.max_parallel_writes) as ex:
-            entries = dict(ex.map(write, ordered))
-        return {key: entries[key] for key in ordered}
+        return self._write_all(results, entry)
 
     def generate_model(self, manifest: ExportManifest) -> dict:
         gen = GENERATORS[self.format_version]

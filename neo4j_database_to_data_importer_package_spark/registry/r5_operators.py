@@ -444,7 +444,7 @@ def dedup_containment_pairs(spark, sf_dir):
     detector Jaccard misses), with the Jaccard carried per pair for
     comparison. Runs with the df(shingle) ≤ 50 cap ACTIVE (mirrored in
     the oracle), so the registered query exercises the scale path —
-    see dedup.containment_pairs / _df_capped_index."""
+    see dedup.containment_pairs / partitioning.drop_hot_keys."""
     from ..operators.dedup import containment_pairs
 
     view = _view(spark, sf_dir)

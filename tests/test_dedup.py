@@ -342,8 +342,8 @@ def test_minhash_bucket_cap_drops_degenerate_cluster(spark, dup_cluster_corpus, 
     """The band self-join must carry the same no-silent-caps discipline
     as the shingle index: a bucket over max_bucket is dropped WITH a
     logged count, killing only that cluster's pairs; buckets under the
-    cap are untouched (round-9 — the text twin of the embedding path's
-    ``_occupancy_capped_blocks``)."""
+    cap are untouched (round-9 — the same ``drop_hot_keys`` screen as
+    the embedding path)."""
     import logging
 
     # Default cap (8192) never fires on this corpus: all pairs present.
@@ -398,11 +398,12 @@ def test_hot_bucket_cache_evicts_dead_sessions_and_counts_drops(
     drops entries keyed by a DEAD applicationId at insert time, and the
     per-(session, op) drop count is queryable so pipelines can assert
     on recall loss instead of scraping logs."""
+    from neo4j_database_to_data_importer_package_spark import partitioning
     from neo4j_database_to_data_importer_package_spark.operators import dedup
 
     app_id = spark.sparkContext.applicationId
-    stale_cache_key = ("dead-app", 0, ("q", "block"), 9)
-    dedup._HOT_BUCKET_CACHE[stale_cache_key] = (("0", "x"),)
+    stale_cache_key = ("dead-app", 0, ("q", "block"), 9, "simhash_pairs")
+    partitioning._HOT_KEYS[stale_cache_key] = (("0", "x"),)
     dedup.dropped_bucket_counts[("dead-app", "simhash_pairs")] = 7
     before = dedup.dropped_bucket_counts.get((app_id, "simhash_pairs"), 0)
 
@@ -415,16 +416,19 @@ def test_hot_bucket_cache_evicts_dead_sessions_and_counts_drops(
     }
     assert capped == {(100, 101)}
     # stale-session entries evicted at insert (cache AND metric)
-    assert stale_cache_key not in dedup._HOT_BUCKET_CACHE
+    assert stale_cache_key not in partitioning._HOT_KEYS
     assert ("dead-app", "simhash_pairs") not in dedup.dropped_bucket_counts
     # this session's screen verdict is cached as literal tuples, not a
     # DataFrame (a checkpointed DataFrame's blocks die with an executor)
     live = [
         v
-        for k, v in dedup._HOT_BUCKET_CACHE.items()
-        if k[0] == app_id and k[3] == 9 and v is not None
+        for k, v in partitioning._HOT_KEYS.items()
+        if k[0] == app_id and k[3] == 9 and k[4] == "simhash_pairs"
     ]
-    assert live and all(isinstance(v, tuple) for v in live)
+    assert live and all(
+        isinstance(v, tuple) and v and all(isinstance(t, tuple) for t in v)
+        for v in live
+    )
     # drop metric counted for this session, queryable by (app, op)
     assert dedup.dropped_bucket_counts[(app_id, "simhash_pairs")] > before
 
@@ -454,17 +458,22 @@ def test_hot_key_overflow_falls_back_to_distributed_anti_join(
     driver (a small cap on a huge corpus makes them driver-scale):
     the cached verdict is an overflow marker, the anti-join runs
     distributed, and results + the drop metric match the tuple path."""
+    from neo4j_database_to_data_importer_package_spark import partitioning
     from neo4j_database_to_data_importer_package_spark.operators import dedup
 
     app_id = spark.sparkContext.applicationId
+    before = dedup.dropped_bucket_counts.get((app_id, "simhash_pairs"), 0)
     expected = {
         (r["id_a"], r["id_b"])
         for r in simhash_pairs(
             dup_cluster_corpus, max_hamming=6, max_bucket=12
         ).collect()
     }
+    n_tuple_path = (
+        dedup.dropped_bucket_counts[(app_id, "simhash_pairs")] - before
+    )
 
-    monkeypatch.setattr(dedup, "_MAX_HOT_KEYS", 0)
+    monkeypatch.setattr(partitioning, "_MAX_HOT_KEYS", 0)
     before = dedup.dropped_bucket_counts.get((app_id, "simhash_pairs"), 0)
     # max_bucket=13 → fresh cache key → the insert path runs under the
     # zero ceiling and every hot screen overflows
@@ -477,14 +486,14 @@ def test_hot_key_overflow_falls_back_to_distributed_anti_join(
     assert got == expected == {(100, 101)}
     overflow = [
         v
-        for k, v in dedup._HOT_BUCKET_CACHE.items()
-        if k[0] == app_id and k[3] == 13
+        for k, v in partitioning._HOT_KEYS.items()
+        if k[0] == app_id and k[3] == 13 and k[4] == "simhash_pairs"
     ]
-    assert overflow and overflow[0][0] == "__overflow__"
+    assert overflow == [None]  # the overflow verdict holds no tuples
     n_recorded = (
         dedup.dropped_bucket_counts[(app_id, "simhash_pairs")] - before
     )
-    assert n_recorded == overflow[0][1] > 0  # exact count, from its own job
+    assert n_recorded == n_tuple_path > 0  # exact count, from its own job
 
 
 def test_simhash_blocks_reject_single_block_geometry(spark, corpus):

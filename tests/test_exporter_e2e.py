@@ -147,6 +147,21 @@ def test_sharded_mode_manifest(view, tmp_path):
     assert all(s.startswith("Customer/") for s in manifest["shards"])
 
 
+def test_sharded_mode_samples_and_model_match_single_file(view, export_dir, tmp_path):
+    """The model is built from the samples, and a sample is what the CSV
+    holds: the sharded export reads it back from its first non-empty
+    shard, so both modes yield the same samples and the same v3.0
+    model (timestamps as written, e.g. ``1997-01-15T00:00:00.000``)."""
+    _, single = export_dir
+    sharded = GraphExporter(view, str(tmp_path / "sharded_model"), single_file=False,
+                            clock=lambda: datetime(2026, 1, 2, 3, 4, 5)).run()
+    for entries in ("nodes", "rels"):
+        got = {k: e.sample for k, e in getattr(sharded.manifest, entries).items()}
+        want = {k: e.sample for k, e in getattr(single.manifest, entries).items()}
+        assert got == want, entries
+    assert sharded.model == single.model
+
+
 def _csv_column(path, name):
     with open(path, newline="") as f:
         reader = csv.DictReader(f)

@@ -1,4 +1,4 @@
-"""fan_out / salted_join semantics."""
+"""fan_out / salted_join / drop_hot_keys semantics."""
 
 from __future__ import annotations
 
@@ -117,3 +117,109 @@ def test_state_broadcaster_join_results_unchanged(spark):
         r["k"] for r in left.join(state_broadcaster(10)(right), "k").collect()
     )
     assert plain == hinted
+
+
+def _docs(spark, texts):
+    return spark.createDataFrame(
+        list(enumerate(texts)), "doc_id long, text string"
+    )
+
+
+def _hot_docs(spark, marker):
+    # Three identical documents put every shingle, term, band and
+    # block in a 3-row bucket; one unrelated document keeps the rest of
+    # the corpus non-empty.
+    same = f"{marker} alpha beta gamma delta epsilon zeta"
+    return _docs(spark, [same, same, same, f"{marker} omega psi chi phi"])
+
+
+def _hot_vecs(spark, seed):
+    import random
+
+    rng = random.Random(seed)
+    base = [rng.gauss(0, 1) for _ in range(64)]
+    rows = [(i, [float(x) for x in base]) for i in range(3)]
+    rows.append((3, [rng.gauss(0, 1) for _ in range(64)]))
+    return spark.createDataFrame(rows, "vec_id long, embedding array<double>")
+
+
+def _hub_edges(spark, offset):
+    # Center 0 (degree 3) is the only common neighbour of 1-2, and of
+    # the non-adjacent pairs 1-3 and 2-3.
+    e = [(0, 1), (0, 2), (0, 3), (1, 2)]
+    return spark.createDataFrame(
+        [(a + offset, b + offset) for a, b in e], "src long, dst long"
+    )
+
+
+def _hot_key_callers():
+    from neo4j_database_to_data_importer_package_spark.operators import (
+        dedup,
+        graph_algos as ga,
+        retrieval,
+        similarity,
+    )
+
+    # (op, make the input, call(df, limit), LeftAnti joins of its own,
+    #  screen memoized across reruns)
+    return [
+        ("ngram_jaccard_pairs", lambda s: _hot_docs(s, "ngram"),
+         lambda df, lim: dedup.ngram_jaccard_pairs(df, threshold=0.1, max_df=lim), 0, True),
+        ("containment_pairs", lambda s: _hot_docs(s, "contain"),
+         lambda df, lim: dedup.containment_pairs(df, threshold=0.1, max_df=lim), 0, True),
+        ("minhash_lsh_pairs", lambda s: _hot_docs(s, "minhash"),
+         lambda df, lim: dedup.minhash_lsh_pairs(df, threshold=0.1, max_bucket=lim), 0, True),
+        ("simhash_pairs", lambda s: _hot_docs(s, "simhash"),
+         lambda df, lim: dedup.simhash_pairs(df, max_bucket=lim), 0, True),
+        ("embedding_lsh_pairs", lambda s: _hot_vecs(s, 5),
+         lambda df, lim: similarity.embedding_lsh_pairs(df, threshold=0.1, max_bucket=lim), 0, True),
+        ("tfidf_cosine_pairs", lambda s: _hot_docs(s, "tfidf"),
+         lambda df, lim: retrieval.tfidf_cosine_pairs(df, threshold=0.0, max_df=lim), 0, True),
+        ("bridge_edges", lambda s: _hub_edges(s, 1000),
+         lambda df, lim: ga.bridge_edges(df, max_center_degree=lim), 0, True),
+        # adamic_adar_topk screens a localCheckpointed table (a fresh
+        # plan hash per call) and keeps its non-adjacency anti-join.
+        ("adamic_adar_topk", lambda s: _hub_edges(s, 2000),
+         lambda df, lim: ga.adamic_adar_topk(df, max_center_degree=lim), 1, False),
+    ]
+
+
+@pytest.mark.parametrize(
+    "case", _hot_key_callers(), ids=lambda c: c[0]
+)
+def test_drop_hot_keys_callers(spark, caplog, case):
+    """Every quadratic self-join runs behind ``drop_hot_keys``: a hot
+    key is dropped with a WARN naming the op and a metric increment,
+    and a cap above every occupancy leaves no anti-join in the plan."""
+    import logging
+
+    from neo4j_database_to_data_importer_package_spark.partitioning import (
+        dropped_bucket_counts,
+    )
+
+    op, build, call, own_anti, memoized = case
+    df = build(spark)
+    app_id = spark.sparkContext.applicationId
+    rows = lambda out: sorted(tuple(r) for r in out.collect())
+
+    full = rows(call(df, 1_000_000))
+    before = dropped_bucket_counts.get((app_id, op), 0)
+    with caplog.at_level(logging.WARNING):
+        capped = rows(call(df, 2))
+    assert capped != full, "the hot key must be dropped"
+    assert any(
+        "dropping" in r.message and op in r.message and "occupancy > 2" in r.message
+        for r in caplog.records
+    )
+    after = dropped_bucket_counts[(app_id, op)]
+    assert after > before
+
+    if memoized:
+        caplog.clear()
+        with caplog.at_level(logging.WARNING):
+            assert rows(call(df, 2)) == capped
+        assert not any("dropping" in r.message for r in caplog.records)
+        assert dropped_bucket_counts[(app_id, op)] == after
+
+    plan = call(df, 1_000_000)._jdf.queryExecution().optimizedPlan().toString()
+    assert plan.count("LeftAnti") == own_anti, plan

@@ -208,52 +208,20 @@ def test_similarity_drop_warn_logs_once_per_screen(spark, caplog):
     ), "re-running the same screen must not re-WARN (log == metric)"
 
 
-def test_similarity_drop_stale_recording_detected(spark, caplog):
-    """ADVICE r11: if a re-execution recomputes a different n_hot than
-    the recorded one (immutable-files assumption violated), the screen
-    logs the divergence instead of silently keeping the stale metric."""
-    import logging
+def test_embedding_screen_evicts_dead_sessions(spark):
+    """The embedding path shares the one hot-key memo and metric: a
+    screen it inserts evicts every entry of a dead applicationId."""
     import random as _random
 
+    from neo4j_database_to_data_importer_package_spark import partitioning
     from neo4j_database_to_data_importer_package_spark.operators import (
+        dedup,
         similarity as sim,
     )
 
-    rng = _random.Random(37)
-    base = [rng.gauss(0, 1) for _ in range(64)]
-    rows = [
-        (i, [float(x + rng.gauss(0, 1e-4)) for x in base]) for i in range(40)
-    ]
-    df = spark.createDataFrame(rows, "vec_id long, embedding array<double>")
-    pre = set(sim._RECORDED_N_HOT)
-    sim.embedding_lsh_pairs(df, threshold=0.9, max_bucket=10).collect()
-    # Simulate a mid-session file mutation: the recorded count no longer
-    # matches what the next execution will recompute. Mutate only the
-    # key THIS run recorded, so other tests' screens stay untouched.
-    keys = [k for k in sim._RECORDED_N_HOT if k not in pre]
-    assert keys, "first run must have recorded its n_hot"
-    for k in keys:
-        sim._RECORDED_N_HOT[k] = sim._RECORDED_N_HOT[k] + 1
-    with caplog.at_level(logging.WARNING):
-        sim.embedding_lsh_pairs(df, threshold=0.9, max_bucket=10).collect()
-    assert any(
-        "immutable-files assumption was violated" in r.message
-        for r in caplog.records
-    ), "recomputed-vs-recorded divergence must be surfaced"
-
-
-def test_similarity_recorded_n_hot_evicted_with_dead_sessions(spark):
-    """The per-screen recorded counts must not leak across Spark
-    sessions: entries keyed to a dead applicationId are swept on the
-    next screen call, like dedup's caches."""
-    import random as _random
-
-    from neo4j_database_to_data_importer_package_spark.operators import (
-        similarity as sim,
-    )
-
-    dead_key = ((("dead-app-id", 123, ("q", "block"), 10)), "embedding_lsh_pairs")
-    sim._RECORDED_N_HOT[dead_key] = 7
+    dead_key = ("dead-app-id", 123, ("q", "block"), 10, "embedding_lsh_pairs")
+    partitioning._HOT_KEYS[dead_key] = ()
+    dedup.dropped_bucket_counts[("dead-app-id", "embedding_lsh_pairs")] = 7
     rng = _random.Random(41)
     base = [rng.gauss(0, 1) for _ in range(64)]
     rows = [
@@ -261,56 +229,10 @@ def test_similarity_recorded_n_hot_evicted_with_dead_sessions(spark):
     ]
     df = spark.createDataFrame(rows, "vec_id long, embedding array<double>")
     sim.embedding_lsh_pairs(df, threshold=0.9, max_bucket=10).collect()
-    assert dead_key not in sim._RECORDED_N_HOT
+    assert dead_key not in partitioning._HOT_KEYS
+    assert ("dead-app-id", "embedding_lsh_pairs") not in dedup.dropped_bucket_counts
     app_id = spark.sparkContext.applicationId
-    assert any(k[0][0] == app_id for k in sim._RECORDED_N_HOT)
-
-
-def test_recorded_n_hot_swept_by_dedup_only_sessions():
-    """ADVICE r12: a session that only exercises the dedup screens must
-    still sweep similarity's _RECORDED_N_HOT — the cache is registered
-    with dedup._evict_dead_sessions, the single shared lifecycle point,
-    so no similarity call is needed to prune dead-session entries."""
-    from neo4j_database_to_data_importer_package_spark.operators import (
-        dedup,
-        similarity as sim,
+    assert any(
+        k[0] == app_id and k[4] == "embedding_lsh_pairs"
+        for k in partitioning._HOT_KEYS
     )
-
-    assert sim._RECORDED_N_HOT in dedup._REGISTERED_SESSION_CACHES
-    dead_key = ((("dead-app-id", 99, ("q", "block"), 10)), "embedding_lsh_pairs")
-    live_key = ((("live-app-id", 1, ("q", "block"), 10)), "embedding_lsh_pairs")
-    sim._RECORDED_N_HOT[dead_key] = 3
-    sim._RECORDED_N_HOT[live_key] = 5
-    try:
-        dedup._evict_dead_sessions("live-app-id")
-        assert dead_key not in sim._RECORDED_N_HOT
-        assert sim._RECORDED_N_HOT[live_key] == 5
-    finally:
-        sim._RECORDED_N_HOT.pop(dead_key, None)
-        sim._RECORDED_N_HOT.pop(live_key, None)
-
-
-def test_session_cache_registration_idempotent_and_key_checked():
-    """ADVICE r13: (a) re-registering the same cache (the importlib.reload
-    path) must not append a second reference; (b) a cache registered with
-    flat ``(app_id, op)`` keys violates the key[0][0]-is-applicationId
-    contract and must fail loudly in the sweep instead of comparing the
-    first *character* of the app-id and silently mis-evicting."""
-    from neo4j_database_to_data_importer_package_spark.operators import (
-        dedup,
-        similarity as sim,
-    )
-
-    count = lambda c: sum(1 for x in dedup._REGISTERED_SESSION_CACHES if x is c)
-    assert count(sim._RECORDED_N_HOT) == 1
-    dedup.register_session_cache(sim._RECORDED_N_HOT)
-    assert count(sim._RECORDED_N_HOT) == 1
-
-    bad = {("live-app-id", "op"): 1}  # flat key — first element is a str
-    dedup.register_session_cache(bad)
-    try:
-        with pytest.raises(TypeError, match="mis-shaped key"):
-            dedup._evict_dead_sessions("live-app-id")
-        assert bad, "mis-shaped cache must not be silently evicted"
-    finally:
-        dedup._REGISTERED_SESSION_CACHES.remove(bad)

@@ -22,7 +22,8 @@ Reported per scale (1x, 64x), using the PRODUCTION banding
   join volume the r06 scale trap inflated;
 - `embedding_lsh_pairs` wall-clock at the registered defaults;
 - a small-cap run (cap chosen below the measured max occupancy) that
-  EXERCISES `_occupancy_capped_blocks` on this organic distribution:
+  EXERCISES `partitioning.drop_hot_keys` (the screen
+  `embedding_lsh_pairs` runs) on this organic distribution:
   the dropped-bucket count must be > 0 and logged, and the candidate
   count must shrink accordingly — proving the defense-in-depth path is
   live, not just configured.
@@ -230,7 +231,7 @@ def main() -> None:
                 print(
                     f"lsh {label} capped(max_bucket={small_cap}): "
                     f"candidates={capped} (was {cands}; drop logged by "
-                    f"_occupancy_capped_blocks)",
+                    f"drop_hot_keys)",
                     flush=True,
                 )
     finally:

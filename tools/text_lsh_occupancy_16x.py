@@ -3,7 +3,8 @@
 (round 9; SCALING.md "text banding occupancy" section; round 10 adds
 the corpus-derived SimHash geometry rows — VERDICT r09 directive #2).
 
-Round 9 added ``dedup._occupancy_capped_buckets`` to the MinHash band
+Round 9 put a logged bucket-occupancy cap (today
+``partitioning.drop_hot_keys``) in front of the MinHash band
 self-join and the SimHash block self-join, and this probe proved the
 then-fixed 16-bit SimHash blocks quadratic (occupancy linear in corpus
 size at constant selectivity). Round 10 parameterized the geometry:
@@ -157,11 +158,13 @@ def main() -> int:
 
     from neo4j_database_to_data_importer_package_spark.operators.dedup import (
         StorageLevel,
-        _occupancy_capped_buckets,
         _simhash_blocks,
         derive_simhash_block_bits,
         minhash_signatures,
         simhash_signatures,
+    )
+    from neo4j_database_to_data_importer_package_spark.partitioning import (
+        drop_hot_keys,
     )
     from neo4j_database_to_data_importer_package_spark.sources.star_schema import (
         read_parquet_table,
@@ -239,8 +242,8 @@ def main() -> int:
                 # Exercise the drop path organically: cap below the
                 # measured max of the DERIVED geometry, production path.
                 small_cap = max(16, int(dst["mx"]) // 4)
-                capped = _occupancy_capped_buckets(
-                    blocks_d, ("q", "block"), small_cap, "probe_simhash"
+                capped = drop_hot_keys(
+                    blocks_d, ["q", "block"], small_cap, "probe_simhash"
                 )
                 cst = occupancy_stats(capped, ("q", "block"), small_cap)
                 assert int(cst["mx"]) <= small_cap, (cst["mx"], small_cap)
