@@ -27,6 +27,9 @@ from pyspark.sql import types as T
 from ..functions.sentinels import sentinel_to_null
 from ..partitioning import fan_out
 
+# Concurrent per-label tier-4 jobs submitted from driver threads.
+MAX_PARALLEL_LABELS = 8
+
 
 def uniqueness_profile(
     df: DataFrame, candidates: list[str], exact: bool = True, rsd: float = 0.02
@@ -113,7 +116,6 @@ def detect_identifiers(
     node_dfs: dict[str, DataFrame],
     unique_constraints: dict[str, list[str]] | None = None,
     approx_screen: bool = False,
-    max_parallel: int = 8,
 ) -> dict[str, str]:
     """Cascade over every label → {label: identifier} (the reference's
     ``self.label_identifiers`` IR, ``neo4j_export.py:301``).
@@ -126,7 +128,7 @@ def detect_identifiers(
     from concurrent.futures import ThreadPoolExecutor
 
     labels = list(node_dfs)
-    with ThreadPoolExecutor(max_workers=min(max_parallel, max(1, len(labels)))) as ex:
+    with ThreadPoolExecutor(max_workers=min(MAX_PARALLEL_LABELS, max(1, len(labels)))) as ex:
         results = ex.map(
             lambda label: (
                 label,

@@ -51,6 +51,17 @@ class NodeExportResult:
     df: DataFrame
 
 
+def export_node(
+    label: str,
+    df: DataFrame,
+    unique_constraints: dict[str, list[str]] | None = None,
+    identifier: str | None = None,
+) -> NodeExportResult:
+    """One label's entry of ``export_nodes``."""
+    out, ident = export_node_table(df, label, unique_constraints, identifier)
+    return NodeExportResult(label, ident, list(out.columns), out)
+
+
 def export_nodes(
     node_dfs: dict[str, DataFrame],
     unique_constraints: dict[str, list[str]] | None = None,
@@ -58,9 +69,7 @@ def export_nodes(
 ) -> dict[str, NodeExportResult]:
     """All labels; the returned dict is the reference's ``node_files`` IR
     plus the lazy DataFrames (writes happen in plans.exporter)."""
-    results: dict[str, NodeExportResult] = {}
-    for label, df in node_dfs.items():
-        ident = (identifiers or {}).get(label)
-        out, ident = export_node_table(df, label, unique_constraints, ident)
-        results[label] = NodeExportResult(label, ident, list(out.columns), out)
-    return results
+    return {
+        label: export_node(label, df, unique_constraints, (identifiers or {}).get(label))
+        for label, df in node_dfs.items()
+    }

@@ -124,6 +124,25 @@ class RelExportResult:
     df: DataFrame
 
 
+def export_relationship(
+    view: GraphView,
+    spec: EdgeSpec,
+    identifiers: dict[str, str],
+    validate_endpoints: bool = True,
+) -> RelExportResult | None:
+    """One pattern's entry of ``export_relationships``, or None when it
+    is skipped (an endpoint label has no identifier)."""
+    df = export_relationship_table(view, spec, identifiers, validate_endpoints)
+    if df is None:
+        return None
+    src_col, tgt_col = endpoint_column_names(
+        spec, identifiers[spec.src_label], identifiers[spec.tgt_label]
+    )
+    return RelExportResult(
+        spec.pattern_key, spec, list(df.columns), src_col, tgt_col, sorted(spec.props), df
+    )
+
+
 def export_relationships(
     view: GraphView,
     identifiers: dict[str, str],
@@ -134,15 +153,6 @@ def export_relationships(
     One pass over each edge table total (vs the reference's k+1 scans per
     rel type, BASELINE.md "scan amplification").
     """
-    results: dict[str, RelExportResult] = {}
-    for spec in view.spec.edges:
-        df = export_relationship_table(view, spec, identifiers, validate_endpoints)
-        if df is None:
-            continue
-        src_id_prop = identifiers[spec.src_label]
-        tgt_id_prop = identifiers[spec.tgt_label]
-        src_col, tgt_col = endpoint_column_names(spec, src_id_prop, tgt_id_prop)
-        results[spec.pattern_key] = RelExportResult(
-            spec.pattern_key, spec, list(df.columns), src_col, tgt_col, sorted(spec.props), df
-        )
-    return results
+    results = (export_relationship(view, spec, identifiers, validate_endpoints)
+               for spec in view.spec.edges)
+    return {r.pattern_key: r for r in results if r is not None}

@@ -8,16 +8,25 @@ DataFrames stay lazy columnar scans (predicate pushdown + column pruning
 reach the parquet reader — the reference's full-node over-fetch,
 ``neo4j_export.py:362-369``, disappears by construction).
 
+``load_graph_view`` reads only the tables the spec's nodes and edges name;
+``spec.extra_tables`` are read on their first ``view.tables[name]``. Every
+read takes its schema from the parquet footer (one pyarrow footer read,
+no Spark schema-inference job; see ``read_parquet_table``).
+
 The TPC-H-ish driver testdata spec follows FIXTURES.md §A.
 """
 
 from __future__ import annotations
 
 import os
+import threading
+from collections.abc import Mapping
 from dataclasses import dataclass, field
+from typing import Callable
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql import types as T
 
 from ..catalog import GraphCatalog, LabelMeta, PropertyMeta
 
@@ -91,14 +100,15 @@ class GraphView:
     """A loaded property-graph view: lazy DataFrames + a catalog.
 
     ``nodes[label]`` is the typed per-label DataFrame (a pruned parquet
-    scan); ``tables[name]`` the raw tables; ``catalog`` mirrors the
-    reference's metadata IR (SURVEY.md §3.2).
+    scan); ``tables[name]`` the raw tables (a :class:`LazyTables` when
+    loaded by ``load_graph_view``); ``catalog`` mirrors the reference's
+    metadata IR (SURVEY.md §3.2).
     """
 
     spark: SparkSession
     spec: GraphSpec
     nodes: dict[str, DataFrame]
-    tables: dict[str, DataFrame]
+    tables: Mapping[str, DataFrame]
     catalog: GraphCatalog
     _detected_identifiers: dict[str, str] | None = None
 
@@ -134,6 +144,84 @@ class GraphView:
         return self.tables[spec.table].select(*ordered)
 
 
+class LazyTables(Mapping):
+    """Tables by name: ``loaded`` as given, the rest read by ``loaders``
+    on their first subscript (once, also under concurrent subscripts).
+    An unknown name raises ``KeyError``."""
+
+    def __init__(self, loaded: dict[str, DataFrame], loaders: dict[str, Callable[[], DataFrame]]):
+        self._tables = dict(loaded)
+        self._loaders = {k: v for k, v in loaders.items() if k not in loaded}
+        self._lock = threading.Lock()
+
+    def __getitem__(self, name: str) -> DataFrame:
+        if name not in self._tables:
+            load = self._loaders[name]
+            with self._lock:
+                if name not in self._tables:
+                    self._tables[name] = load()
+        return self._tables[name]
+
+    def __iter__(self):
+        return iter({**self._loaders, **self._tables})
+
+    def __len__(self) -> int:
+        return len(self._tables.keys() | self._loaders.keys())
+
+
+def _read_type(at, ntz: bool) -> T.DataType:
+    """The type Spark's parquet reader gives an arrow footer type, every
+    level nullable (file-source reads are ``asNullable``). Raises
+    ``TypeError`` for a type not covered here."""
+    import pyarrow.types as pat
+
+    from pyspark.sql.pandas.types import from_arrow_type
+
+    if pat.is_struct(at):
+        return T.StructType([T.StructField(f.name, _read_type(f.type, ntz), True) for f in at])
+    if pat.is_list(at) or pat.is_large_list(at):
+        return T.ArrayType(_read_type(at.value_type, ntz), True)
+    if pat.is_map(at):
+        return T.MapType(_read_type(at.key_type, ntz), _read_type(at.item_type, ntz), True)
+    if pat.is_timestamp(at):
+        # INT64 TIMESTAMP(NANOS) reads as raw longs (nanosAsLong).
+        return T.LongType() if at.unit == "ns" else from_arrow_type(at, prefer_timestamp_ntz=ntz)
+    plain = (pat.is_boolean, pat.is_signed_integer, pat.is_float32, pat.is_float64,
+             pat.is_decimal128, pat.is_string, pat.is_large_string, pat.is_binary,
+             pat.is_large_binary, pat.is_date32)
+    if any(test(at) for test in plain):
+        return from_arrow_type(at)
+    raise TypeError(f"no parquet read type for {at}")
+
+
+def footer_schema(spark: SparkSession, path: str):
+    """``(read schema, arrow footer schema)`` of one parquet file from a
+    single pyarrow footer read.
+
+    The read schema is the one Spark's schema inference returns, or None
+    when the footer holds a type outside the mapping (INT96, unsigned,
+    dictionary, time, ...) or ``binaryAsString`` is set. The footer is
+    None when pyarrow cannot open ``path`` (a directory, say)."""
+    try:
+        import pyarrow.parquet as pq
+
+        with pq.ParquetFile(path) as pf:
+            footer, columns = pf.schema_arrow, pf.metadata.schema
+    except Exception:
+        return None, None
+    conf = spark.conf
+    # pyarrow shows INT96 as timestamp[ns]; Spark reads it as a timestamp.
+    if (any(c.physical_type == "INT96" for c in columns)
+            or conf.get("spark.sql.parquet.binaryAsString", "false").lower() == "true"):
+        return None, footer
+    ntz = conf.get("spark.sql.parquet.inferTimestampNTZ.enabled", "true").lower() == "true"
+    try:
+        fields = [T.StructField(f.name, _read_type(f.type, ntz), True) for f in footer]
+    except TypeError:
+        return None, footer
+    return T.StructType(fields), footer
+
+
 def read_parquet_table(spark: SparkSession, path: str) -> DataFrame:
     """Parquet read tolerant of INT64 TIMESTAMP(NANOS) columns.
 
@@ -142,16 +230,18 @@ def read_parquet_table(spark: SparkSession, path: str) -> DataFrame:
     timestamps from the footer schema — same truncation DuckDB applies,
     so oracle comparisons agree. Column identity is preserved, so
     pruning/pushdown still reach the scan for all other columns.
+
+    The footer is read once, with pyarrow, and also gives the read
+    schema, so Spark runs no schema-inference job; a footer type outside
+    ``footer_schema``'s mapping falls back to inference.
     """
     spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    df = spark.read.parquet(path)
-    try:
-        import pyarrow.parquet as pq
-        import pyarrow as pa
-
-        footer = pq.read_schema(path)
-    except Exception:
+    schema, footer = footer_schema(spark, path)
+    df = (spark.read.schema(schema) if schema is not None else spark.read).parquet(path)
+    if footer is None:
         return df
+    import pyarrow as pa
+
     dtypes = dict(df.dtypes)
     for fld in footer:
         if pa.types.is_timestamp(fld.type) and dtypes.get(fld.name) == "bigint":
@@ -207,10 +297,18 @@ def load_graph_view(
     spec: GraphSpec = TPCH_GRAPH_SPEC,
     fmt: str = "parquet",
 ) -> GraphView:
-    """Load a star-schema directory as a graph view (lazy scans only)."""
-    tables: dict[str, DataFrame] = {}
-    names = {n.table for n in spec.nodes} | {e.table for e in spec.edges} | set(spec.extra_tables)
-    for name in sorted(names):
+    """Load a star-schema directory as a graph view (lazy scans only).
+
+    The tables the spec's nodes and edges name are read now; the
+    ``extra_tables`` on their first ``view.tables[name]``."""
+
+    def loader(name):
         path = os.path.join(sf_dir, f"{name}.{fmt}" if fmt == "parquet" else name)
-        tables[name] = read_parquet_table(spark, path)
+        return lambda: read_parquet_table(spark, path)
+
+    graph = {n.table for n in spec.nodes} | {e.table for e in spec.edges}
+    tables = LazyTables(
+        {name: loader(name)() for name in sorted(graph)},
+        {name: loader(name) for name in spec.extra_tables},
+    )
     return build_graph_view(spark, spec, tables)

@@ -5,12 +5,15 @@ from __future__ import annotations
 import csv
 import json
 import os
+import threading
 import zipfile
 from datetime import datetime
 
 import pytest
 
+from neo4j_database_to_data_importer_package_spark.plans import exporter as exporter_mod
 from neo4j_database_to_data_importer_package_spark.plans.exporter import GraphExporter
+from neo4j_database_to_data_importer_package_spark.sinks.zip_sink import create_zip
 from neo4j_database_to_data_importer_package_spark.sources.star_schema import load_graph_view
 
 
@@ -196,3 +199,85 @@ def test_detected_identifier_export_translates_endpoints(view, export_dir, tmp_p
             _csv_column(declared_out / f"{key}.csv", declared.manifest.rels[key].source_col_name)
         )
         assert n_rows == n_declared, key
+
+
+# -- the pipeline: one writer pool, early deflate ------------------------------
+
+def _is_node_csv(view, path):
+    return os.path.basename(path)[: -len(".csv")] in view.nodes
+
+
+def test_relationship_writes_do_not_wait_for_node_writes(view, tmp_path, monkeypatch):
+    """Identifier detection is the only barrier: with every node write held
+    until some relationship write has started, the export still ends."""
+    rel_started = threading.Event()
+    write = exporter_mod.write_csv_single_file
+
+    def gated(df, path, **kwargs):
+        if _is_node_csv(view, path):
+            assert rel_started.wait(timeout=60), "no relationship write started"
+        else:
+            rel_started.set()
+        return write(df, path, **kwargs)
+
+    monkeypatch.setattr(exporter_mod, "write_csv_single_file", gated)
+    result = GraphExporter(view, str(tmp_path / "out")).run()
+    assert len(result.manifest.nodes) == 6 and len(result.manifest.rels) == 6
+
+
+def test_pipelined_zip_equals_zip_of_finished_directory(export_dir, tmp_path):
+    out, result = export_dir
+    again = create_zip(str(out), result.files, zip_path=str(tmp_path / "again.zip"))
+    with open(result.zip_path, "rb") as a, open(again, "rb") as b:
+        assert a.read() == b.read()
+
+
+def _open_files_under(directory):
+    fd_dir = "/proc/self/fd"
+    targets = []
+    for fd in os.listdir(fd_dir):
+        try:
+            targets.append(os.readlink(os.path.join(fd_dir, fd)))
+        except OSError:
+            continue
+    return [t for t in targets if t.startswith(str(directory))]
+
+
+def test_failed_write_leaves_no_zip_spool_or_thread(view, tmp_path, monkeypatch):
+    """A table write that raises after other CSVs have landed (and started
+    deflating) propagates; no archive, temp archive or spool survives and
+    the deflate pool is joined."""
+    landed = threading.Event()
+    write = exporter_mod.write_csv_single_file
+
+    def failing(df, path, **kwargs):
+        if os.path.basename(path) == "Order_SUPPLIED_BY_Supplier.csv":
+            landed.wait(timeout=60)
+            raise OSError("disk full")
+        result = write(df, path, **kwargs)
+        landed.set()
+        return result
+
+    monkeypatch.setattr(exporter_mod, "write_csv_single_file", failing)
+    out = tmp_path / "out"
+    with pytest.raises(OSError, match="disk full"):
+        GraphExporter(view, str(out), clock=lambda: datetime(2026, 1, 2, 3, 4, 5)).run(
+            create_zip_file=True
+        )
+    assert os.listdir(tmp_path) == ["out"]
+    assert all(name.endswith(".csv") for name in os.listdir(out)), os.listdir(out)
+    assert _open_files_under(out) == []
+    assert not [t for t in threading.enumerate() if t.name.startswith("zip-deflate")]
+
+
+def test_stray_csv_is_zipped_and_listed(view, tmp_path):
+    """Every ``.csv`` in the output directory is packed (S12,
+    ``neo4j_export.py:1264-1269``), also one the export did not write."""
+    out = tmp_path / "out"
+    out.mkdir()
+    (out / "Stray.csv").write_text("a,b\n1,2\n")
+    result = GraphExporter(view, str(out)).run(create_zip_file=True, zip_path=str(tmp_path / "x.zip"))
+    assert "Stray.csv" in result.files
+    with zipfile.ZipFile(result.zip_path) as zf:
+        assert zf.namelist() == result.files
+        assert zf.read("Stray.csv") == b"a,b\n1,2\n"

@@ -8,6 +8,9 @@ import random
 import shutil
 import struct
 import subprocess
+import sys
+import threading
+import time
 import zipfile
 from datetime import datetime
 
@@ -151,3 +154,123 @@ def test_auto_name(export_files):
     got = zip_sink.create_zip(str(src), files, clock=lambda: datetime(2026, 1, 2, 3, 4, 5))
     assert got == os.path.join(os.path.dirname(src), "out-export-2026-01-02-030405.zip")
     _check_contents(got, src, files)
+
+
+def _counting_reads(monkeypatch):
+    """Count raw chunks held: +1 when a chunk is read, minus whatever the
+    entry lets go; record the peak."""
+    held = {"now": 0, "peak": 0}
+    lock = threading.Lock()
+    read, put, fail = zip_sink._Entry.read, zip_sink._Entry.put, zip_sink._Entry.fail
+
+    def counted(n):
+        with lock:
+            held["now"] += n
+            held["peak"] = max(held["peak"], held["now"])
+
+    def read_counted(self, i):
+        counted(1)
+        return read(self, i)
+
+    def put_counted(self, i, piece, data):
+        let_go = put(self, i, piece, data)
+        counted(-let_go)
+        return let_go
+
+    def fail_counted(self, e):
+        let_go = fail(self, e)
+        counted(-let_go)
+        return let_go
+
+    monkeypatch.setattr(zip_sink._Entry, "read", read_counted)
+    monkeypatch.setattr(zip_sink._Entry, "put", put_counted)
+    monkeypatch.setattr(zip_sink._Entry, "fail", fail_counted)
+    return held
+
+
+def test_raw_chunks_in_flight_bounded_across_entries(export_files, tmp_path, monkeypatch):
+    """Entries started early, on several threads, share one bound of
+    ``2 × workers`` raw chunks; every chunk is let go exactly once."""
+    src, files = export_files
+    held = _counting_reads(monkeypatch)
+    interval = sys.getswitchinterval()
+    sys.setswitchinterval(1e-5)
+    try:
+        with zip_sink.EntryDeflater(str(src)) as deflater:
+            threads = [threading.Thread(target=deflater.add, args=(os.path.join(src, n), n))
+                       for n in files]
+            for t in threads:
+                t.start()
+            for t in threads:
+                t.join(timeout=60)
+                assert not t.is_alive()
+            got = zip_sink.create_zip(str(src), files, zip_path=str(tmp_path / "p.zip"),
+                                      deflater=deflater)
+            assert deflater._free == 2 * deflater.workers
+    finally:
+        sys.setswitchinterval(interval)
+    assert 1 < held["peak"] <= 2 * deflater.workers
+    assert held["now"] == 0
+    ref = zip_sink.create_zip(str(src), files, zip_path=str(tmp_path / "ref.zip"))
+    with open(got, "rb") as a, open(ref, "rb") as b:
+        assert a.read() == b.read()
+
+
+def test_raw_chunks_bounded_behind_a_slow_chunk(tmp_path, monkeypatch):
+    """Chunks deflated ahead of a slow first chunk wait in memory until it
+    lands; the bound still holds them to ``2 × workers``."""
+    workers = len(os.sched_getaffinity(0))
+    (tmp_path / "Big.csv").write_bytes(b"a,b,c\n" * ((2 * workers + 4) * MIB // 6))
+    release = threading.Event()
+    read = zip_sink._Entry.read
+
+    def slow_first(self, i):
+        if i == 0:
+            release.wait(timeout=60)
+        return read(self, i)
+
+    monkeypatch.setattr(zip_sink._Entry, "read", slow_first)
+    held = _counting_reads(monkeypatch)
+    timer = threading.Timer(1.0, release.set)
+    timer.start()
+    try:
+        got = zip_sink.create_zip(str(tmp_path), ["Big.csv"], zip_path=str(tmp_path / "p.zip"))
+    finally:
+        timer.cancel()
+        release.set()
+    assert held["peak"] == 2 * workers
+    assert held["now"] == 0
+    with zipfile.ZipFile(got) as zf:
+        assert zf.read("Big.csv") == (tmp_path / "Big.csv").read_bytes()
+
+
+def test_failed_entry_frees_its_chunks(export_files, tmp_path, monkeypatch):
+    """A chunk that fails ends its entry and lets go of every chunk the
+    entry held, also those waiting behind it, so the other entries still
+    finish."""
+    src, files = export_files
+    read = zip_sink._Entry.read
+
+    def failing(self, i):
+        if self.zi.filename == "Multi.csv" and i == 2:
+            # Fail once chunks 3-5 are deflated and waiting behind this one.
+            deadline = time.monotonic() + 30
+            while len(self.ready) < 3 and time.monotonic() < deadline:
+                time.sleep(0.01)
+            raise OSError("bad sector")
+        return read(self, i)
+
+    monkeypatch.setattr(zip_sink._Entry, "read", failing)
+    held = _counting_reads(monkeypatch)
+    with zip_sink.EntryDeflater(str(src)) as deflater:
+        for name in files:
+            deflater.add(os.path.join(src, name), name)
+        with open(tmp_path / "entries.bin", "wb") as out:
+            for name in files:
+                if name == "Multi.csv":
+                    with pytest.raises(OSError, match="bad sector"):
+                        deflater.write_entry(out, name)
+                else:
+                    deflater.write_entry(out, name)
+    assert held["now"] == 0
+    assert deflater._free == 2 * deflater.workers
